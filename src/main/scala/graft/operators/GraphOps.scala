@@ -97,11 +97,31 @@ object GraphOps {
     * or under it would run its rounds 1-wide anyway, so the distributed
     * form degenerates to one task per stage PLUS a driver barrier per
     * round — strictly worse than one task total. Env-overridable for
-    * cluster tuning; 0 forces the distributed loop (GraphProbe uses this
-    * to exercise the round machinery at probe scale). */
+    * cluster tuning through [[parseLocalMaxEdges]]; 0 forces the
+    * distributed loop (GraphProbe uses this to exercise the round
+    * machinery at probe scale). */
+  private[graft] val DefaultLocalFinishMaxEdges = 4000000L
+
+  /** Ceiling on the override: 4× the default. The one finishing task
+    * holds two LongMaps over up to 2 nodes per edge (~40 B per entry), so
+    * 16M edges is already a ~1.3 GB executor heap; a larger value would
+    * route an arbitrarily large edge set into one task with no warning. */
+  private[graft] val MaxLocalFinishMaxEdges = 4 * DefaultLocalFinishMaxEdges
+
+  /** The SPARK_GRAFT_CC_LOCAL_MAX_EDGES override: unset → the default; a
+    * non-numeric or negative value fails loud; values above
+    * [[MaxLocalFinishMaxEdges]] clamp to it; 0 stays 0. */
+  private[graft] def parseLocalMaxEdges(raw: Option[String]): Long =
+    raw.map(_.trim) match {
+      case None => DefaultLocalFinishMaxEdges
+      case Some(v) =>
+        v.toLongOption.filter(_ >= 0).map(math.min(_, MaxLocalFinishMaxEdges))
+          .getOrElse(throw new IllegalArgumentException(
+            s"SPARK_GRAFT_CC_LOCAL_MAX_EDGES must be a non-negative edge count, got '$v'"))
+    }
+
   private[graft] val LocalFinishMaxEdges: Long =
-    sys.env.get("SPARK_GRAFT_CC_LOCAL_MAX_EDGES")
-      .flatMap(_.toLongOption).getOrElse(4000000L)
+    parseLocalMaxEdges(sys.env.get("SPARK_GRAFT_CC_LOCAL_MAX_EDGES"))
 
   /** As [[connectedComponents]], also returning the number of star rounds
     * it took to converge (exposed so tests can assert the O(log n) bound —

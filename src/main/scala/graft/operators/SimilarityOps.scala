@@ -1515,7 +1515,7 @@ object SimilarityOps {
   /** k at which [[kmAssign]] switches to the pruned path. 32 keeps every
     * oracle-replayed registry query (k=8) on the brute plan while the
     * scale rule k=√(n/2) (k ≥ 32 from n ≥ 2048) always prunes. */
-  private val PruneK = 32
+  private[graft] val PruneK = 32
 
   /** Driver-side index over the k centroids for assignment pruning: the
     * centroids themselves are clustered into G ≈ √k groups (a few Lloyd's
@@ -1800,26 +1800,16 @@ object SimilarityOps {
       .toDF("vec_id", "v", "cid", "d")
   }
 
-  /** k centroids after `iters` full Lloyd's rounds (assign + mean update),
-    * means rounded to 1e-4 per component (see the family comment above).
-    * Each round is one corpus scan + a k-row codegen'd aggregate (64
-    * per-component sums partial-aggregate map-side; the UDAF alternative
-    * forces ObjectHashAggregate — measured 3.6× slower in the IVF build)
-    * and a k-row collect for the next broadcast — the canonical scalable
-    * iterative shape. An emptied cluster keeps its previous centroid, the
-    * same carry rule the oracle's LEFT JOIN + coalesce spells. */
-  /** Runs a quantizer-training body (driver-side collect loop over
-    * map-only scans + fixed-group aggregates) under the conf those jobs
-    * actually want, restoring the session conf after (r21 optimization,
-    * guide §1.2/§2.2):
+  /** Runs a distributed quantizer-training body (driver-side collect loop
+    * over map-only scans + fixed-group aggregates) under the conf those
+    * jobs actually want (r21 optimization, guide §1.2/§2.2):
     *
     *  - AQE off: every training action here is scan → partial agg →
     *    exchange → final agg → collect, with NO join anywhere in the
     *    plan, so AQE's join levers can't fire; what it did contribute
     *    was materializing each collect's exchange as a separately
     *    scheduled job plus a re-optimization gap — measured at 2-3 jobs
-    *    per collect where the static plan needs one (the ivf/pq/kmeans
-    *    family runs 3-11 such collects per query).
+    *    per collect where the static plan needs one.
     *  - Reduce partitions = min(session, `groups`), where `groups` is the
     *    aggregate's EXACT key count (k cells / nSub·ksub codes / Dim gram
     *    rows — known a priori, scale-independent): partial aggregation
@@ -1829,77 +1819,158 @@ object SimilarityOps {
     *    The session value stays the cap so a cluster's sizing is never
     *    exceeded.
     *
+    * Only the above-bound path of [[lloyd]] gets here: a training set
+    * under [[LocalTrainMaxWork]] trains in memory and plans no
+    * aggregate at all.
+    *
     * Partial-agg merge order (and hence the last ulp of the sums) is
     * task-arrival nondeterministic under ANY partition count — the 1e-4
     * rounding contract on every trained mean absorbs it, unchanged.
     *
-    * Scoping (r22, r21 verdict "what's wrong" #2): the body runs on a
-    * SESSION CLONE (`newSession()` — same SparkContext, SharedState,
-    * cache manager and extensions; its own SessionState/conf) that
-    * carries the override permanently, with the input frame re-bound to
-    * it plan-for-plan (GraftSqlBridge.rebind — no RDD round-trip, so
-    * column pruning and codegen fusion survive). The r21 form mutated
-    * the SHARED session conf and restored it in `finally` — correct
-    * serially, but a concurrent query planning on the same session
-    * mid-training silently ran with AQE off and clamped partitions.
-    * (A thread-local `SQLConf.withExistingConf` clone was tried first
-    * and rejected by measurement: Spark 4.1's AQE insertion reads the
-    * session conf, not the thread-local, so the override's main lever
-    * never engaged.) Clones are cached per (parent session, groups) —
-    * SessionState construction is not free, and the groups clamp keys
-    * the conf. TrainConfScopeSpec pins reach and isolation. */
+    * Scoping (r22): the body runs on a SESSION CLONE (`newSession()` —
+    * same SparkContext, SharedState, cache manager and extensions; its
+    * own SessionState/conf) that carries the override permanently, with
+    * the input frame re-bound to it plan-for-plan (GraftSqlBridge.rebind
+    * — no RDD round-trip, so column pruning and codegen fusion survive),
+    * so a concurrent query planning on the same session keeps AQE and its
+    * own partition count. Clones are cached per (parent session, groups,
+    * the parent's CURRENT spark.sql.shuffle.partitions) — SessionState
+    * construction is not free, and keying on the live parent value means
+    * a later change to the parent's width reaches the clamp instead of
+    * training on at a stale one. TrainConfScopeSpec pins reach, isolation
+    * and the re-keying. */
   private val trainSessions =
     new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[Int, SparkSession]]()
+      scala.collection.mutable.Map[(Int, Int), SparkSession]]()
 
-  private def trainSession(s: SparkSession, groups: Int): SparkSession =
+  private def trainSession(s: SparkSession, groups: Int): SparkSession = {
+    val sessParts = s.conf.get("spark.sql.shuffle.partitions")
+      .toIntOption.getOrElse(200)
     trainSessions.synchronized {
-      var perGroups = trainSessions.get(s)
-      if (perGroups == null) {
-        perGroups = scala.collection.mutable.Map.empty[Int, SparkSession]
-        trainSessions.put(s, perGroups)
+      var perKey = trainSessions.get(s)
+      if (perKey == null) {
+        perKey = scala.collection.mutable.Map.empty[(Int, Int), SparkSession]
+        trainSessions.put(s, perKey)
       }
-      perGroups.getOrElseUpdate(groups, {
-        val parts = math.max(1, math.min(
-          s.conf.get("spark.sql.shuffle.partitions")
-            .toIntOption.getOrElse(200), groups))
+      perKey.getOrElseUpdate((groups, sessParts), {
         val t = s.newSession()
         t.conf.set("spark.sql.adaptive.enabled", "false")
-        t.conf.set("spark.sql.shuffle.partitions", parts.toString)
+        t.conf.set("spark.sql.shuffle.partitions",
+          math.max(1, math.min(sessParts, groups)).toString)
         t
       })
     }
+  }
 
   private[graft] def trainConf[T](e: DataFrame, groups: Int)(
       body: DataFrame => T): T =
-    if (sys.env.get("SPARK_GRAFT_TRAINCONF").contains("off")) body(e)
-    else body(org.apache.spark.sql.GraftSqlBridge.rebind(
+    body(org.apache.spark.sql.GraftSqlBridge.rebind(
       e, trainSession(e.sparkSession, groups)))
 
-  private[graft] def kmCentroids(
-      eIn: DataFrame, k: Int, iters: Int): Array[(Int, Array[Double])] = trainConf(eIn, k) { e =>
-    val spark = e.sparkSession
-    import spark.implicits._
-    var centroids: Array[(Int, Array[Double])] = e
-      .filter(col("vec_id") < k)
-      .select(col("vec_id").cast("int"), col("v"))
-      .as[(Int, Array[Double])](EncIV).collect().sortBy(_._1)
-    for (_ <- 1 to iters) {
-      val sums = (0 until Dim).map(j =>
-        sum(element_at(col("v"), j + 1)).as(s"s$j"))
-      val updated = kmAssign(e, centroids)
-        .groupBy("cid")
-        .agg(sums.head, sums.tail :+ count(lit(1)).as("n"): _*)
-        .select(col("cid"),
-          array((0 until Dim).map(j =>
-            round(col(s"s$j") / col("n") * 10000) / 10000): _*).as("c"))
-        .as[(Int, Array[Double])](EncIV).collect().toMap
-      centroids = centroids.map { case (cid, old) =>
-        cid -> updated.getOrElse(cid, old)
-      }
+  /** Per-round assignment work (vectors × cells × Dim multiply-adds)
+    * under which a Lloyd's-family trainer collects its training set ONCE
+    * and runs every round on the driver ([[LloydLocal]]) instead of one
+    * scan + aggregate + collect job per round. A distributed round pays a
+    * fixed price no corpus under this scale amortizes — plan build, job
+    * scheduling and the collect barrier, 0.5-1.4 s per 2-round build at
+    * 500 vectors on a 4-core local[4] session — while one driver thread
+    * runs the brute kernels at roughly 1-2 ns per multiply-add. Measured
+    * on that box (2-round builds, warm, min of 3, in-memory vs
+    * distributed): up to 2²⁵ the in-memory path wins everywhere (pqTrain
+    * ksub=16 over 32k vectors: 0.46 vs 0.56 s), at 2²⁷ the brute PQ
+    * kernel is past break-even (ksub=256 over 8k vectors: 0.51 vs
+    * 0.44 s) and at 2²⁹ it loses 1.5× (1.85 vs 1.21 s). The bound, 2²⁶,
+    * sits one power of two below the break-even; a wider
+    * cluster only moves the break-even down by the executors' share of a
+    * round, which under the bound is smaller than the round's fixed
+    * price. Like [[GraphOps.LocalFinishMaxEdges]] the dispatch keys off
+    * a runtime measurement — the set is collected under a
+    * `limit(maxRows + 1)`, so an over-bound corpus costs one bounded
+    * scan before the distributed loop. */
+  private[graft] val LocalTrainMaxWork: Long = 1L << 26
+
+  /** Row ceiling on the collected set whatever the work: the collect
+    * itself is one single-task scan (~8-10 µs per 64-dim vector on the
+    * box above), so past ~2¹⁵ vectors it alone outweighs the distributed
+    * rounds it replaces (pqTrain ksub=16 over 65,536 vectors: 0.89 vs
+    * 0.79 s). 2¹⁵ × Dim doubles is also a bounded 16 MB of driver heap. */
+  private val LocalTrainMaxRows = 1 << 15
+
+  /** The training set as driver rows when it is under both bounds, else
+    * None. ONE job: `coalesce(1)` + limit reads partitions in order in a
+    * single task and stops after maxRows + 1 rows. vec_id rides as long
+    * with NULL mapped to Long.MaxValue (never below a seed bound, the
+    * distributed `vec_id < k` filter's verdict on NULL). Any row whose v is
+    * NULL, not Dim long or holds a NULL element sends the set to the
+    * distributed path, which keeps the plan's own null semantics. */
+  private def localTrainingSet(
+      e: DataFrame, workPerRow: Long,
+      maxWork: Long): Option[Array[(Long, Array[Double])]] = {
+    val maxRows = math.min(LocalTrainMaxRows.toLong, maxWork / workPerRow)
+    if (maxRows <= 0) None
+    else {
+      val dense = coalesce(size(col("v")) === Dim &&
+        !exists(col("v"), _.isNull), lit(false))
+      val rows = e.select(
+          coalesce(col("vec_id").cast("long"), lit(Long.MaxValue)),
+          when(dense, col("v").cast("array<double>")))
+        .coalesce(1).limit(maxRows.toInt + 1)
+        .as[(Long, Array[Double])](EncLV).collect()
+      if (rows.length > maxRows || rows.exists(_._2 == null)) None
+      else Some(rows)
     }
-    centroids
   }
+
+  /** The shared dispatch of the Lloyd's-family trainers: `local` over the
+    * collected rows when [[localTrainingSet]] yields them, else
+    * `distributed` under [[trainConf]]. `maxWork` is the caller-visible
+    * bound — 0 forces the distributed path (the specs' A/B lever, as
+    * `localFinishMaxEdges = 0` is for connected components). */
+  private def lloyd[T](e: DataFrame, groups: Int, workPerRow: Long,
+      maxWork: Long)(local: Array[(Long, Array[Double])] => T)(
+      distributed: DataFrame => T): T =
+    localTrainingSet(e, workPerRow, maxWork) match {
+      case Some(rows) => local(rows)
+      case None => trainConf(e, groups)(distributed)
+    }
+
+  /** k centroids after `iters` full Lloyd's rounds (assign + mean update),
+    * means rounded to 1e-4 per component (see the family comment above).
+    * Dispatches through [[lloyd]]: a training set under
+    * [[LocalTrainMaxWork]] (n·k·Dim) trains in memory in one collect
+    * job; above it each round is one corpus scan + a k-row codegen'd
+    * aggregate (64 per-component sums partial-aggregate map-side; the
+    * UDAF alternative forces ObjectHashAggregate — measured 3.6× slower
+    * in the IVF build) and a k-row collect for the next broadcast. Both
+    * paths assign with [[kmAssign]]'s arithmetic and return the same
+    * centroids bit for bit. An emptied cluster keeps its previous
+    * centroid, the same carry rule the oracle's LEFT JOIN + coalesce
+    * spells. */
+  private[graft] def kmCentroids(
+      eIn: DataFrame, k: Int, iters: Int,
+      localMaxWork: Long = LocalTrainMaxWork): Array[(Int, Array[Double])] =
+    lloyd(eIn, k, k.toLong * Dim, localMaxWork)(
+        LloydLocal.kmCentroids(_, k, iters)) { e =>
+      var centroids: Array[(Int, Array[Double])] = e
+        .filter(col("vec_id") < k)
+        .select(col("vec_id").cast("int"), col("v"))
+        .as[(Int, Array[Double])](EncIV).collect().sortBy(_._1)
+      for (_ <- 1 to iters) {
+        val sums = (0 until Dim).map(j =>
+          sum(element_at(col("v"), j + 1)).as(s"s$j"))
+        val updated = kmAssign(e, centroids)
+          .groupBy("cid")
+          .agg(sums.head, sums.tail :+ count(lit(1)).as("n"): _*)
+          .select(col("cid"),
+            array((0 until Dim).map(j =>
+              round(col(s"s$j") / col("n") * 10000) / 10000): _*).as("c"))
+          .as[(Int, Array[Double])](EncIV).collect().toMap
+        centroids = centroids.map { case (cid, old) =>
+          cid -> updated.getOrElse(cid, old)
+        }
+      }
+      centroids
+    }
 
   /** The brute IVF cell assignment — (vec_id, v, cid) by argmax dot
     * against a k×Dim literal centroid tree. Argmax via a MATERIALIZED
@@ -2364,20 +2435,45 @@ object SimilarityOps {
           require(v.length == n,
             s"rotateBy: ${v.length}-dim vector under a $n-dim rotation " +
               "— a mismatched rotation must fail loud, not truncate")
-          val out = new Array[Double](n)
-          var i = 0
-          while (i < n) {
-            val ri = r(i)
-            var s = 0.0
-            var j = 0
-            while (j < n) { s += ri(j) * v(j); j += 1 }
-            out(i) = s
-            i += 1
-          }
-          (id, out)
+          (id, rotateVec(r, v))
         }
       }
       .toDF("vec_id", "v")
+  }
+
+  /** R·v with row i the ascending-j left fold Σ R(i)(j)·v(j) — the one
+    * rotation kernel [[rotateBy]], [[opqGram]] and the in-memory OPQ
+    * sweep ([[LloydLocal]]) share. */
+  private[graft] def rotateVec(
+      r: Array[Array[Double]], v: Array[Double]): Array[Double] = {
+    val n = r.length
+    val out = new Array[Double](n)
+    var i = 0
+    while (i < n) {
+      val ri = r(i)
+      var s = 0.0
+      var j = 0
+      while (j < n) { s += ri(j) * v(j); j += 1 }
+      out(i) = s
+      i += 1
+    }
+    out
+  }
+
+  /** decode(encode(y)): each subspace's [[pqNearest]] codebook entry
+    * copied into place — the reconstruction [[opqGram]] and the
+    * in-memory OPQ gram both take. */
+  private[graft] def pqReconstruct(
+      books: Array[Array[Array[Double]]], y: Array[Double]): Array[Double] = {
+    val ds = books(0)(0).length
+    val yh = new Array[Double](books.length * ds)
+    var m = 0
+    while (m < books.length) {
+      val best = pqNearest(books(m), y, m * ds)
+      System.arraycopy(books(m)(best), 0, yh, m * ds, ds)
+      m += 1
+    }
+    yh
   }
 
   // ---- OPQ proper (Ge et al., Optimized Product Quantization, CVPR
@@ -2409,26 +2505,8 @@ object SimilarityOps {
       .mapPartitions { it =>
         val rm = bcR.value
         val books = bcCb.value
-        val n = books.length
-        val ds = books(0)(0).length
         it.flatMap { case (_, x) =>
-          val y = new Array[Double](Dim)
-          var i = 0
-          while (i < Dim) {
-            val ri = rm(i)
-            var s = 0.0
-            var j = 0
-            while (j < Dim) { s += ri(j) * x(j); j += 1 }
-            y(i) = s
-            i += 1
-          }
-          val yh = new Array[Double](Dim)
-          var m = 0
-          while (m < n) {
-            val best = pqNearest(books(m), y, m * ds)
-            System.arraycopy(books(m)(best), 0, yh, m * ds, ds)
-            m += 1
-          }
+          val yh = pqReconstruct(books, rotateVec(rm, x))
           Iterator.tabulate(Dim)(a => (a, yh(a), x))
         }
       }(EncIDV)
@@ -2529,9 +2607,13 @@ object SimilarityOps {
   }
 
   /** The OPQ alternation: `sweeps` rounds of (PQ-train on R·X) →
-    * (Procrustes R-update), initialized at [[rrMatrix]]. Everything
-    * data-side is the same scalable one-pass shape as [[pqTrain]]/
-    * [[opqGram]]; the SVD is a 64×64 driver-side solve. Deterministic
+    * (Procrustes R-update), initialized at [[rrMatrix]]. Same size
+    * dispatch as [[lloyd]]: under [[LocalTrainMaxWork]] (per row and sweep,
+    * the gram pass's Dim² rotation + ksub·Dim encode + Dim² outer product)
+    * the set is collected once and every rotation, codebook round, gram
+    * and Procrustes solve runs in memory; above it each sweep is
+    * [[pqTrain]] on the rotated frame + one [[opqGram]] aggregate. The
+    * SVD is a 64×64 driver-side solve either way. Deterministic
     * end-to-end (seeded init, 1e-4-rounded aggregates, fixed-order
     * Jacobi), but DATA-dependent — unlike [[rrMatrix]] the trained
     * rotation cannot be printed into static oracle SQL (the fixture
@@ -2539,14 +2621,23 @@ object SimilarityOps {
     * entry with OpqSpec pinning determinism, orthonormality, and the
     * published payoff over the RR baseline. */
   private[graft] def opqTrainRotation(
-      e: DataFrame, nSub: Int, ksub: Int, pqIters: Int,
-      sweeps: Int): Array[Array[Double]] = {
-    var r = rrMatrix
-    for (_ <- 1 to sweeps) {
-      val cb = pqTrain(rotateBy(e, r), nSub, ksub, pqIters)
-      r = svdRotation(opqGram(e, r, cb))
+      e: DataFrame, nSub: Int, ksub: Int, pqIters: Int, sweeps: Int,
+      localMaxWork: Long = LocalTrainMaxWork): Array[Array[Double]] = {
+    val dsub = Dim / nSub
+    require(dsub * nSub == Dim, s"Dim=$Dim not divisible by nSub=$nSub")
+    // no trainConf around the distributed sweeps: pqTrain and opqGram
+    // each scope their own aggregate
+    localTrainingSet(e, (ksub + 2L * Dim) * Dim, localMaxWork) match {
+      case Some(rows) =>
+        LloydLocal.opqTrainRotation(rows, nSub, ksub, pqIters, sweeps)
+      case None =>
+        var r = rrMatrix
+        for (_ <- 1 to sweeps) {
+          val cb = pqTrain(rotateBy(e, r), nSub, ksub, pqIters, localMaxWork)
+          r = svdRotation(opqGram(e, r, cb))
+        }
+        r
     }
-    r
   }
 
   /** Deployment ARMING RULE for the trained rotation (r18 verdict #2):
@@ -2590,57 +2681,64 @@ object SimilarityOps {
   }
 
   /** Per-subspace Lloyd's: `nSub` independent ksub-means over the Dim/nSub
-    * slices, all subspaces trained in the SAME corpus scans — each round
+    * slices, all subspaces trained in the SAME pass. Dispatches through
+    * [[lloyd]]: under [[LocalTrainMaxWork]] (n·ksub·Dim) the set is
+    * collected once and every round runs in memory; above it each round
     * is one mapPartitions (assign every slice, emit (m, cid, slice)) + one
-    * codegen'd partial-aggregating groupBy(m, cid) mean + one nSub×ksub-row
-    * collect for the next broadcast, exactly [[kmCentroids]]'s scalable
-    * shape ×nSub without ×nSub scans. Init = slices of the first ksub
-    * vec_ids; emptied cells keep their previous entry; means rounded 1e-4
-    * (the iterative-float family contract — here it only pins determinism
-    * across reruns, since no SQL oracle replays PQ). */
+    * codegen'd partial-aggregating groupBy(m, cid) mean + one
+    * nSub×ksub-row collect for the next broadcast, exactly
+    * [[kmCentroids]]'s distributed shape ×nSub without ×nSub scans. Both
+    * paths assign with [[pqNearest]] and return the same codebooks bit
+    * for bit. Init = slices of the first ksub vec_ids; emptied cells keep
+    * their previous entry; means rounded 1e-4 (the iterative-float family
+    * contract — here it only pins determinism across reruns, since no SQL
+    * oracle replays PQ). */
   private[graft] def pqTrain(
-      eIn: DataFrame, nSub: Int, ksub: Int, iters: Int): Array[Array[Array[Double]]] = trainConf(eIn, nSub * ksub) { e =>
-    val spark = e.sparkSession
-    import spark.implicits._
+      eIn: DataFrame, nSub: Int, ksub: Int, iters: Int,
+      localMaxWork: Long = LocalTrainMaxWork): Array[Array[Array[Double]]] = {
     val dsub = Dim / nSub
     require(dsub * nSub == Dim, s"Dim=$Dim not divisible by nSub=$nSub")
-    var cb: Array[Array[Array[Double]]] = {
-      val seed = e.filter(col("vec_id") < ksub)
-        .select(col("vec_id").cast("int"), col("v"))
-        .as[(Int, Array[Double])](EncIV).collect().sortBy(_._1).map(_._2)
-      require(seed.length == ksub,
-        s"PQ init needs vec_ids 0..${ksub - 1} present (got ${seed.length})")
-      Array.tabulate(nSub)(m => seed.map(_.slice(m * dsub, m * dsub + dsub)))
-    }
-    for (_ <- 1 to iters) {
-      val bc = spark.sparkContext.broadcast(cb)
-      val assigned = e.select(col("vec_id").cast("long"), col("v"))
-        .as[(Long, Array[Double])](EncLV)
-        .mapPartitions { it =>
-          val books = bc.value
-          val n = books.length
-          val ds = books(0)(0).length
-          it.flatMap { case (_, v) =>
-            Iterator.tabulate(n) { m =>
-              (m, pqNearest(books(m), v, m * ds),
-                v.slice(m * ds, m * ds + ds))
+    lloyd(eIn, nSub * ksub, ksub.toLong * Dim, localMaxWork)(
+        LloydLocal.pqTrain(_, nSub, ksub, iters)) { e =>
+      val spark = e.sparkSession
+      var cb: Array[Array[Array[Double]]] = {
+        val seed = e.filter(col("vec_id") < ksub)
+          .select(col("vec_id").cast("int"), col("v"))
+          .as[(Int, Array[Double])](EncIV).collect().sortBy(_._1).map(_._2)
+        require(seed.length == ksub,
+          s"PQ init needs vec_ids 0..${ksub - 1} present (got ${seed.length})")
+        Array.tabulate(nSub)(m => seed.map(_.slice(m * dsub, m * dsub + dsub)))
+      }
+      for (_ <- 1 to iters) {
+        val bc = spark.sparkContext.broadcast(cb)
+        val assigned = e.select(col("vec_id").cast("long"), col("v"))
+          .as[(Long, Array[Double])](EncLV)
+          .mapPartitions { it =>
+            val books = bc.value
+            val n = books.length
+            val ds = books(0)(0).length
+            it.flatMap { case (_, v) =>
+              Iterator.tabulate(n) { m =>
+                (m, pqNearest(books(m), v, m * ds),
+                  v.slice(m * ds, m * ds + ds))
+              }
             }
-          }
-        }(EncIIV)
-        .toDF("m", "cid", "sub")
-      val sums = (0 until dsub).map(j =>
-        sum(element_at(col("sub"), j + 1)).as(s"s$j"))
-      val updated = assigned.groupBy("m", "cid")
-        .agg(sums.head, sums.tail :+ count(lit(1)).as("n"): _*)
-        .select(col("m"), col("cid"),
-          array((0 until dsub).map(j =>
-            round(col(s"s$j") / col("n") * 10000) / 10000): _*).as("c"))
-        .as[(Int, Int, Array[Double])](EncIIV).collect()
-        .map { case (m, c, arr) => (m, c) -> arr }.toMap
-      cb = Array.tabulate(nSub)(m => Array.tabulate(ksub)(c =>
-        updated.getOrElse((m, c), cb(m)(c))))
+          }(EncIIV)
+          .toDF("m", "cid", "sub")
+        val sums = (0 until dsub).map(j =>
+          sum(element_at(col("sub"), j + 1)).as(s"s$j"))
+        val updated = assigned.groupBy("m", "cid")
+          .agg(sums.head, sums.tail :+ count(lit(1)).as("n"): _*)
+          .select(col("m"), col("cid"),
+            array((0 until dsub).map(j =>
+              round(col(s"s$j") / col("n") * 10000) / 10000): _*).as("c"))
+          .as[(Int, Int, Array[Double])](EncIIV).collect()
+          .map { case (m, c, arr) => (m, c) -> arr }.toMap
+        cb = Array.tabulate(nSub)(m => Array.tabulate(ksub)(c =>
+          updated.getOrElse((m, c), cb(m)(c))))
+      }
+      cb
     }
-    cb
   }
 
   /** (vec_id, v, code array<tinyint> of nSub entries): one map-side pass,
@@ -2797,15 +2895,16 @@ object SimilarityOps {
       .withColumn("code", col("code").cast("array<tinyint>"))
   }
 
-  /** Caller-owned trained quantizer handle (r22, the honest Lloyd's-chain
-    * cut — r21 "not yet optimized" #2): a long-lived pipeline trains ONCE
-    * per corpus via [[trainQuantizer]] and reuses the handle across every
-    * [[encodeWith]] call in the process, instead of re-running the
-    * 3-collect training chain per operation. EXPLICITLY NOT a
-    * module-level memo: nothing is cached engine-side — the caller owns
-    * the handle's lifetime, and every registry query keeps training
-    * inside its own plan, so the bench/oracle per-query cold contract is
-    * untouched (that is the point). The streaming twin is
+  /** Caller-owned trained quantizer handle (r22): a long-lived pipeline
+    * trains ONCE per corpus via [[trainQuantizer]] and reuses the handle
+    * across every [[encodeWith]] call in the process, instead of paying
+    * the training chain per operation — one collect job per trainer when
+    * the training set is under [[LocalTrainMaxWork]], one job per Lloyd's
+    * round above it. EXPLICITLY NOT a module-level memo: nothing is
+    * cached engine-side — the caller owns the handle's lifetime, and
+    * every registry query keeps training inside its own plan, so the
+    * bench/oracle per-query cold contract is untouched (that is the
+    * point). The streaming twin is
     * [[graft.streaming.IvfPqIngest.GenStructs]], whose members this
     * mirrors; QuantizerHandleSpec pins handle-encode ≡ inline-encode bit
     * for bit and that re-encoding under one handle runs zero training
@@ -2820,8 +2919,9 @@ object SimilarityOps {
   /** Train coarse centroids + residual PQ codebooks once (optionally in
     * a rotated space) and hand them to the caller. Same training path
     * the registry queries run inline — [[kmCentroids]] then [[pqTrain]]
-    * on [[ivfPqResiduals]] — so the handle is bit-identical to what any
-    * single query would have trained on the same frame. */
+    * on [[ivfPqResiduals]], each through the [[lloyd]] size dispatch —
+    * so the handle is bit-identical to what any single query would have
+    * trained on the same frame. */
   def trainQuantizer(
       e: DataFrame, nlist: Int, nSub: Int, ksub: Int,
       kmIters: Int = 2, pqIters: Int = 2,

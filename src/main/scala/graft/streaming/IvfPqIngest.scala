@@ -141,7 +141,11 @@ object IvfPqIngest {
     * measured right answer for variance-balanced data where the
     * rotation costs recall. Coarse centroids and residual codebooks
     * then train in the chosen space. This is the one-call retrain an
-    * operator runs when the qerr signal flags. */
+    * operator runs when the qerr signal flags. Every trainer goes through
+    * the SimilarityOps size dispatch, so a window under
+    * [[SimilarityOps.LocalTrainMaxWork]] trains in memory after one
+    * collect per trainer; `localTrainMaxWork` = 0 forces the distributed
+    * rounds (the structures are bit-identical either way). */
   def trainGeneration(
       window: DataFrame,
       nlist: Int,
@@ -150,7 +154,8 @@ object IvfPqIngest {
       kmIters: Int = 2,
       pqIters: Int = 2,
       opqSweeps: Int = 2,
-      minDrop: Double = 0.15): GenStructs = {
+      minDrop: Double = 0.15,
+      localTrainMaxWork: Long = SimilarityOps.LocalTrainMaxWork): GenStructs = {
     // The rotation machinery (rrMatrix init, opqTrainRotation) is pinned
     // at SimilarityOps.Dim — a wider window would silently TRUNCATE
     // through rotateBy and a narrower one would throw mid-train (r19
@@ -163,9 +168,12 @@ object IvfPqIngest {
         s"but the OPQ/RR rotation is ${SimilarityOps.Dim}-dim — rotated " +
         "structures would silently truncate or throw; train unrotated " +
         "structures directly (kmCentroids + pqTrain) for other dims")
-    val opqR = SimilarityOps.opqTrainRotation(window, nSub, ksub, pqIters, opqSweeps)
-    val qerrRr = flatQerr(window, Some(SimilarityOps.rrMatrix), nSub, ksub, pqIters)
-    val qerrOpq = flatQerr(window, Some(opqR), nSub, ksub, pqIters)
+    val opqR = SimilarityOps.opqTrainRotation(
+      window, nSub, ksub, pqIters, opqSweeps, localTrainMaxWork)
+    val qerrRr = flatQerr(window, Some(SimilarityOps.rrMatrix), nSub, ksub,
+      pqIters, localTrainMaxWork)
+    val qerrOpq = flatQerr(window, Some(opqR), nSub, ksub, pqIters,
+      localTrainMaxWork)
     val rot = if (SimilarityOps.opqArmed(qerrRr, qerrOpq, minDrop)) Some(opqR)
       else None
     val base = rot match {
@@ -173,10 +181,11 @@ object IvfPqIngest {
       case None => window.select(col("vec_id").cast("long").as("vec_id"),
         col("v").cast("array<double>").as("v"))
     }
-    val cents = SimilarityOps.kmCentroids(base, nlist, kmIters)
+    val cents = SimilarityOps.kmCentroids(base, nlist, kmIters, localTrainMaxWork)
     val resid = SimilarityOps.ivfPqResiduals(base, cents)
       .select(col("vec_id"), col("r").as("v"))
-    GenStructs(cents, SimilarityOps.pqTrain(resid, nSub, ksub, pqIters), rot)
+    GenStructs(cents,
+      SimilarityOps.pqTrain(resid, nSub, ksub, pqIters, localTrainMaxWork), rot)
   }
 
   /** Total flat-PQ quantization error of `e` under rotation `rot` —
@@ -185,11 +194,11 @@ object IvfPqIngest {
     * ‖y − decode(encode(y))‖². */
   private def flatQerr(
       e: DataFrame, rot: Option[Rot],
-      nSub: Int, ksub: Int, pqIters: Int): Double = {
+      nSub: Int, ksub: Int, pqIters: Int, localTrainMaxWork: Long): Double = {
     val spark = e.sparkSession
     import spark.implicits._
     val frame = rot.map(SimilarityOps.rotateBy(e, _)).getOrElse(e)
-    val cb = SimilarityOps.pqTrain(frame, nSub, ksub, pqIters)
+    val cb = SimilarityOps.pqTrain(frame, nSub, ksub, pqIters, localTrainMaxWork)
     val bcCb = spark.sparkContext.broadcast(cb)
     val out = frame.select(col("vec_id").cast("long"), col("v"))
       .as[(Long, Array[Double])]
@@ -434,25 +443,14 @@ object IvfPqIngest {
       () => { bcIdx.destroy(); bcC.destroy(); bcCb.destroy(); bcR.destroy() })
   }
 
-  /** y = R·v, ascending-j fold per row — bit-identical to
-    * [[SimilarityOps.rotateBy]]'s loop, so a store fed through this path
+  /** y = R·v through [[SimilarityOps.rotateVec]], the kernel
+    * [[SimilarityOps.rotateBy]] runs, so a store fed through this path
     * equals a batch `rotateBy → ivfPqEncode` build bit for bit. */
   private def rotated(r: Rot, v: Array[Double]): Array[Double] = {
-    val n = r.length
-    require(v.length == n,
-      s"rotated: ${v.length}-dim vector under a $n-dim rotation — a " +
+    require(v.length == r.length,
+      s"rotated: ${v.length}-dim vector under a ${r.length}-dim rotation — a " +
         "mismatched GenStructs.rot must fail loud, not truncate")
-    val out = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      val ri = r(i)
-      var s = 0.0
-      var j = 0
-      while (j < n) { s += ri(j) * v(j); j += 1 }
-      out(i) = s
-      i += 1
-    }
-    out
+    SimilarityOps.rotateVec(r, v)
   }
 
   /** Writes one batch's codes + stats dirs under a generation (Overwrite

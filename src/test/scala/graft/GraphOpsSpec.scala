@@ -106,4 +106,27 @@ class GraphOpsSpec extends AnyFunSuite {
     // contract); 7's self-loop adds nothing to its real component
     assert(got == Map(7L -> 7L, 8L -> 7L, 9L -> 9L))
   }
+
+  test("the local-finish override: unset is the 4M default, 0 stays 0") {
+    assert(GraphOps.parseLocalMaxEdges(None) == 4000000L)
+    assert(GraphOps.parseLocalMaxEdges(Some("0")) == 0L)
+    assert(GraphOps.parseLocalMaxEdges(Some(" 1234 ")) == 1234L)
+  }
+
+  test("the local-finish override caps at 4x the default") {
+    val cap = GraphOps.MaxLocalFinishMaxEdges
+    assert(cap == 4 * GraphOps.DefaultLocalFinishMaxEdges)
+    assert(GraphOps.parseLocalMaxEdges(Some(cap.toString)) == cap)
+    assert(GraphOps.parseLocalMaxEdges(Some((cap + 1).toString)) == cap)
+    assert(GraphOps.parseLocalMaxEdges(Some(Long.MaxValue.toString)) == cap)
+  }
+
+  test("the local-finish override rejects non-numeric and negative values") {
+    for (bad <- Seq("abc", "4e6", "", "-1", "99999999999999999999")) {
+      val err = intercept[IllegalArgumentException](
+        GraphOps.parseLocalMaxEdges(Some(bad)))
+      assert(err.getMessage.contains("SPARK_GRAFT_CC_LOCAL_MAX_EDGES"),
+        s"'$bad' must fail naming the variable: ${err.getMessage}")
+    }
+  }
 }

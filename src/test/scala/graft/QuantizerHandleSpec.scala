@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.SimilarityOps
+import org.apache.spark.GraftTestBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -59,16 +60,20 @@ class QuantizerHandleSpec extends AnyFunSuite {
         override def onJobStart(s: SparkListenerJobStart): Unit =
           jobs.incrementAndGet()
       }
+      // training's own job events must be delivered before the listener
+      // joins the bus
+      GraftTestBridge.drainListeners(spark.sparkContext)
       spark.sparkContext.addSparkListener(l)
       try {
         SimilarityOps.encodeWith(e, q).count()
-        Thread.sleep(300) // let listener events drain
+        GraftTestBridge.drainListeners(spark.sparkContext)
         val first = jobs.get()
         SimilarityOps.encodeWith(e, q).count()
-        Thread.sleep(300) // let listener events drain
+        GraftTestBridge.drainListeners(spark.sparkContext)
         val second = jobs.get() - first
-        // An encode is one corpus pass (1-2 jobs with AQE); the training
-        // chain alone is 3+ collects. Equal counts pin "no retrain".
+        // An encode is one corpus pass (1-2 jobs with AQE); retraining
+        // adds at least one collect job per trainer (kmCentroids, then
+        // pqTrain). Equal counts pin "no retrain".
         assert(second == first,
           s"second encode ran $second jobs vs $first — a handle re-use " +
             "must not retrain")

@@ -78,4 +78,20 @@ class TrainConfScopeSpec extends AnyFunSuite {
       assert(hit, "rebound training frame must read the parent's cache")
     } finally df.unpersist()
   }
+
+  test("the clamp follows a change to the parent's shuffle partitions") {
+    val df = spark.range(0, 1000).select(
+      (col("id") % 7).as("k"), col("id").as("x"))
+    def width: Int = SimilarityOps.trainConf(df, 64) { e =>
+      e.groupBy("k").agg(sum("x")).rdd.getNumPartitions
+    }
+    TestSpark.withConfs("spark.sql.shuffle.partitions" -> "3") {
+      assert(width == 3)
+    }
+    // same (parent, groups): a clone cached under the old width must not
+    // keep training at it
+    TestSpark.withConfs("spark.sql.shuffle.partitions" -> "5") {
+      assert(width == 5, "training must clamp to the parent's current width")
+    }
+  }
 }
