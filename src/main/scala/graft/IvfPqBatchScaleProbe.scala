@@ -22,8 +22,10 @@ import graft.streaming.IvfPqIngest
   *    the full knn pipeline shape.
   *    Run: `IvfPqBatchScaleProbe 1000000 100000 0 0`.
   *  - **Seq decode face under tombstones** (`seqProbes` > 0,
-  *    `delFrac` > 0): the r19 10M decode measurements ran
-  *    tombstone-free while IvfPqDeleteProbe ran at ≤ 1M; this arm
+  *    `delFrac` > 0; at ksub 256 and nprobe 16 a batch over 128
+  *    probes is past retrieveBatch's LUT bound, so it decodes): the
+  *    r19 10M decode measurements ran tombstone-free while
+  *    IvfPqDeleteProbe ran at ≤ 1M; this arm
   *    closes the composition gap — decode retrieval at the SAME
   *    corpus, before and after tombstoning `delFrac` of it, must stay
   *    wall-flat (the broadcast anti-join is the only added work),
@@ -45,8 +47,7 @@ object IvfPqBatchScaleProbe {
     // has one disk: 16B pairs × ~44 B/row of sort spill is hundreds of
     // GB (measured: ENOSPC at 1M×1M on a 79 GB-free box), so a
     // single-box run processes the probe FRAME in bounded chunks, each
-    // a full retrieveBatchDf call appended to the same result — the
-    // same discipline as the LUT face's probe chunks, at frame level.
+    // a full retrieveBatchDf call appended to the same result.
     val dfChunk = args.lift(4).map(_.toInt).getOrElse(0)
     val spark = Sessions.local(appName = "graft-ivfpq-batch-scale-probe")
     import spark.implicits._
@@ -121,8 +122,7 @@ object IvfPqBatchScaleProbe {
       val probes = pool.take(seqProbes)
       def decodeArm(tag: String): (Double, Array[(Long, Long)]) = {
         val (rows, wall) = timed(s"retrieveBatch decode [$tag]") {
-          IvfPqIngest.retrieveBatch(spark, dir, gens, probes, nprobe, k,
-            strategy = "decode")
+          IvfPqIngest.retrieveBatch(spark, dir, gens, probes, nprobe, k)
             .select("probe_id", "vec_id").as[(Long, Long)].collect()
         }
         val perProbe = rows.groupBy(_._1).view.mapValues(_.length)

@@ -98,7 +98,8 @@ object IvfPqDeleteProbe {
       val runs = (1 to 3).map { _ =>
         spark.catalog.clearCache()
         timed(s"  retrieve (nprobe=3, k=$k)") {
-          IvfPqIngest.retrieve(spark, dir, cents, cb, target, 3, k)
+          IvfPqIngest.retrieveGens(spark, dir,
+            Map(0 -> IvfPqIngest.GenStructs(cents, cb)), target, 3, k)
             .collect().map(_.getLong(0)).toSet
         }
       }

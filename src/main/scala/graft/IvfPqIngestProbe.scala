@@ -124,7 +124,8 @@ object IvfPqIngestProbe {
 
     // Retrieval over the full accumulated store (nBatches+1 batch dirs).
     val (ids, retrWall) = timed("retrieve (nprobe=3, k=20)") {
-      val got = IvfPqIngest.retrieve(spark, dir, cents, cb, target, 3, 20)
+      val got = IvfPqIngest.retrieveGens(spark, dir,
+        Map(0 -> IvfPqIngest.GenStructs(cents, cb)), target, 3, 20)
       val plan = got.queryExecution.executedPlan.toString
       require(plan.contains("PartitionFilters: [") &&
         plan.split("PartitionFilters:")(1).takeWhile(_ != ']').contains("cid"),

@@ -177,9 +177,10 @@ object IvfPqMigrateProbe {
       flagged.foreach(b =>
         IvfPqIngest.migrateBatch(spark, dir, b, corpus, 0, 1, cents1, cb1))
     }
-    val gens = Map(0 -> ((cents0, cb0)), 1 -> ((cents1, cb1)))
+    val gens = Map(0 -> IvfPqIngest.GenStructs(cents0, cb0),
+      1 -> IvfPqIngest.GenStructs(cents1, cb1))
     def retrieveIds(pv: Array[Double]): Set[Long] = {
-      val got = IvfPqIngest.retrieve(spark, dir, gens, pv, 4, 20)
+      val got = IvfPqIngest.retrieveGens(spark, dir, gens, pv, 4, 20)
       val plan = got.queryExecution.executedPlan.toString
       require(plan.contains("PartitionFilters: [") &&
         plan.split("PartitionFilters:")(1).takeWhile(_ != ']').contains("cid"),

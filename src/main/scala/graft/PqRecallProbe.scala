@@ -360,7 +360,7 @@ object PqRecallProbe {
           .filter(col("rk") <= 64)
           .select("probe_id", "vec_id")
       })
-    // ONE-PASS decode-side IVF arm (the retrieveBatch "decode" strategy
+    // ONE-PASS decode-side IVF arm (retrieveBatchDf's decode-side ADC
     // shape, r19): the same pruned (probe, cell) pair set as the chunked
     // arm, but the store is read ONCE for the whole batch — probes +
     // structures ride tiny broadcasts and each pair's ADC computes from

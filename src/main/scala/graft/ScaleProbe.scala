@@ -359,47 +359,6 @@ object ScaleProbe {
     require(mismatches == 0,
       s"pruned assignment diverged from brute on $mismatches vectors")
 
-    // ---- IVF quantizer at production nlist (round-13 verdict task #1):
-    // the Lloyd's BUILD is the job the old brute n×k shape made the
-    // cluster-eater — k×Dim literal plan, every vector dotted against
-    // every centroid. A/B both builds at nlist=1024 over the same
-    // corpus: centroids must be BIT-IDENTICAL (the pruned path only
-    // skips centroids that provably lose), and the pruned build's
-    // wall-time is the number that replaces brute.
-    val nlist = 1024
-    var ivfFast: Array[(Int, Array[Double])] = Array.empty
-    var ivfSlow: Array[(Int, Array[Double])] = Array.empty
-    time(s"ivf_build_pruned k=$nlist") {
-      ivfFast = graft.operators.SimilarityOps
-        .ivfBuildHook(spark, vdir, nlist, 2, forceBrute = false)
-      ivfFast.length
-    }
-    time(s"ivf_build_brute k=$nlist") {
-      ivfSlow = graft.operators.SimilarityOps
-        .ivfBuildHook(spark, vdir, nlist, 2, forceBrute = true)
-      ivfSlow.length
-    }
-    def centBits(cs: Array[(Int, Array[Double])]) =
-      cs.toSeq.map { case (c, a) =>
-        c -> a.toSeq.map(java.lang.Double.doubleToLongBits) }
-    require(centBits(ivfFast) == centBits(ivfSlow),
-      "pruned IVF quantizer build diverged from brute")
-    // and the assignment pass itself over the built quantizer
-    val (ivfBruteDf, ivfPrunedDf) = graft.operators.SimilarityOps
-      .ivfAssignBothHook(spark, vdir, ivfFast)
-    def grabCells(df: org.apache.spark.sql.DataFrame): Array[(Long, Int)] =
-      df.select(col("vec_id").cast("long"), col("cid")).collect()
-        .map(r => (r.getLong(0), r.getInt(1))).sortBy(_._1)
-    var ivfBrute, ivfPruned = Array.empty[(Long, Int)]
-    time(s"ivf_assign_brute k=$nlist") { ivfBrute = grabCells(ivfBruteDf); ivfBrute.length }
-    time(s"ivf_assign_pruned k=$nlist") { ivfPruned = grabCells(ivfPrunedDf); ivfPruned.length }
-    require(ivfBrute.length == nVecs && ivfPruned.length == nVecs)
-    val ivfMismatch = ivfBrute.zip(ivfPruned).count { case (a, b) => a != b }
-    require(ivfMismatch == 0,
-      s"pruned IVF assignment diverged from brute on $ivfMismatch vectors")
-    println(s"[scale-probe] ivf quantizer k=$nlist: builds bit-identical, " +
-      s"cells identical on $nVecs vectors")
-
     // ---- CentIndex construction cost at production k (round-13 verdict
     // task #3): the grouping is driver work — parallelized this round —
     // and the index itself is the broadcast every assignment task pulls.

@@ -872,11 +872,11 @@ object SimilarityOps {
     // curation — SemDeDup's §3 "cluster the corpus" stage (Abbas et al.
     // 2023, arXiv:2303.09540) as a first-class operator, ORACLE-CHECKED
     // end to end (the rounded-mean contract above makes the iterative
-    // float algorithm cross-engine exact — contrast q_ivf_topk, whose
-    // unrounded quantizer is no-oracle by design). Output is the final
-    // assignment under the round-2 centroids plus its rounded squared
-    // distance — the (vector → cell) map a curation pipeline persists as
-    // a partition column.
+    // float algorithm cross-engine exact; q_ivf_topk's quantizer is this
+    // same rounded k-means, so it is oracle-checked too). Output is the
+    // final assignment under the round-2 centroids plus its rounded
+    // squared distance — the (vector → cell) map a curation pipeline
+    // persists as a partition column.
     "q_kmeans_assign" -> kmeansAssignQ(KmK, KmIters),
 
     // SemDeDup PROPER: k-means cells as the candidate structure (the
@@ -1348,28 +1348,6 @@ object SimilarityOps {
     (kmAssignBrute(e, cents), kmAssignPruned(e, cents))
   }
 
-  /** ScaleProbe hooks for the IVF quantizer A/B (round-13 verdict task
-    * #1): the full Lloyd's build with the assignment path pinned, and
-    * both assignment frames over one centroid set, mirroring
-    * [[assignBoth]]. */
-  private[graft] def ivfBuildHook(
-      s: SparkSession, d: String, k: Int, iters: Int,
-      forceBrute: Boolean): Array[(Int, Array[Double])] =
-    ivfCentroids(vecs(s, d), k, iters, forceBrute)
-
-  private[graft] def ivfAssignBothHook(
-      s: SparkSession, d: String,
-      cents: Array[(Int, Array[Double])]): (DataFrame, DataFrame) = {
-    val e = vecs(s, d)
-    // reference arm: literal plan below PruneK, exhaustive broadcast at
-    // production k (the literal tree OOMs the driver there — see
-    // ivfAssignExhaustive)
-    val ref =
-      if (cents.length >= PruneK) ivfAssignExhaustive(e, cents)
-      else ivfAssignBrute(e, cents)
-    (ref, ivfAssignPruned(e, cents))
-  }
-
   /** The q_cluster_dedup pipeline at arbitrary (k, iters, τ) — see
     * [[kmeansAssignQ]] for why the registry pins the parameters.
     *
@@ -1468,8 +1446,7 @@ object SimilarityOps {
     AnnPlanes.sketchCol(vcol, 8)
 
   /** Squared-distance scores to every centroid, as one materialized array
-    * (the ivfCentroids argmax lesson: a when()-chain argmin re-evaluates
-    * subtrees exponentially). The decomposition d = |v|² − 2·v·c + |c|²
+    * (a when()-chain argmin re-evaluates subtrees exponentially). The decomposition d = |v|² − 2·v·c + |c|²
     * is shared with the DuckDB oracle TERM FOR TERM: each Σ is a
     * left-to-right fold (native dot_product ≡ DuckDB list_sum; the |c|²
     * term is a driver-side Scala fold over the same rounded components),
@@ -1684,90 +1661,6 @@ object SimilarityOps {
       }
       (cids(bestIdx), best)
     }
-
-    // ---- MIPS face: the IVF quantizer's argmax dot(v,c) ----
-    // Same group structure, Cauchy–Schwarz bounds instead of the reverse
-    // triangle inequality: dot(v,c) = dot(v,g) + dot(v, c−g)
-    // ≤ dot(v,g) + |v|·|c−g| (member bound) ≤ dot(v,g) + |v|·radius(g)
-    // (group bound). Any centroid EVALUATED uses the identical strict
-    // left-to-right dot fold as the brute Column path's DotProduct, and
-    // selection replicates Spark's double ordering exactly
-    // (SQLOrderingUtil.compareDoubles: x == y ⇒ equal, so ±0.0 ties
-    // fold; else Double.compare, so NaN outranks everything and equals
-    // NaN — array_max + array_position land on the FIRST index of the
-    // max, i.e. lowest index among ties). Slack on skips mirrors
-    // `assign`: every |dot| term is ≤ |v|·max|c| by Cauchy–Schwarz, so
-    // the float error in the bound chain lives at that operand scale and
-    // absEps = 1e-12·(|v|·max|c| + 1) dominates it with ~100× headroom;
-    // NaN bounds never skip (the < compares false).
-    private val maxNormC: Double = cs.map(c => math.sqrt(c.map(x => x * x).sum)).max
-
-    /** Index (NOT cid) of the argmax-dot centroid of v — the brute
-      * `array_position(scores, array_max(scores)) − 1` cell, bit for
-      * bit. Index and cid coincide for the 0..k-1 quantizer builds, but
-      * returning the index keeps the contract exactly the brute one. */
-    def assignMips(v: Array[Double]): Int = {
-      var vv = 0.0
-      var i = 0
-      while (i < dim) { vv += v(i) * v(i); i += 1 }
-      val nv = math.sqrt(vv)
-      // dot(v, center_j) per group (bounds only — plain driver-float care)
-      val dvg = new Array[Double](nGroups)
-      var j = 0
-      while (j < nGroups) {
-        var vc = 0.0; var t = 0
-        val g = centers(j)
-        while (t < dim) { vc += v(t) * g(t); t += 1 }
-        dvg(j) = vc
-        j += 1
-      }
-      val gub = Array.tabulate(nGroups)(j => dvg(j) + nv * radius(j))
-      // descending upper bound; NaN sorts last under TotalOrdering's
-      // negation but a NaN bound never passes a skip test anyway
-      val order = Array.range(0, nGroups).sortBy(j => -gub(j))
-      val absEps = 1e-12 * (nv * maxNormC + 1.0)
-      var best = Double.NegativeInfinity
-      var bestIdx = -1
-      var oi = 0
-      while (oi < nGroups) {
-        val gj = order(oi)
-        if (!(gub(gj) + math.abs(gub(gj)) * 1e-9 + absEps < best)) {
-          val mem = members(gj); val md = memberDist(gj)
-          var m = 0
-          while (m < mem.length) {
-            val ub = dvg(gj) + nv * md(m)
-            if (!(ub + math.abs(ub) * 1e-9 + absEps < best)) {
-              val ci = mem(m)
-              val c = cs(ci)
-              var vc = 0.0; var t = 0
-              while (t < dim) { vc += v(t) * c(t); t += 1 } // == DotProduct fold
-              val cmp = if (vc == best) 0 else java.lang.Double.compare(vc, best)
-              if (cmp > 0 || (cmp == 0 && ci < bestIdx)) { best = vc; bestIdx = ci }
-            }
-            m += 1
-          }
-        }
-        oi += 1
-      }
-      if (bestIdx < 0) {
-        // all-NaN bounds regime (NaN components in v): evaluate
-        // everything; Double.compare makes the first NaN dot win, the
-        // brute array_position-of-NaN-max cell
-        var ii = 0
-        while (ii < k) {
-          val c = cs(ii)
-          var vc = 0.0; var t = 0
-          while (t < dim) { vc += v(t) * c(t); t += 1 }
-          val cmp =
-            if (bestIdx < 0) 1
-            else if (vc == best) 0
-            else java.lang.Double.compare(vc, best)
-          if (cmp > 0) { best = vc; bestIdx = ii }
-          ii += 1
-        }
-      }
-      bestIdx
-    }
   }
 
   /** Test hook (KmeansPruneProps): the pruning index over a centroid
@@ -1971,173 +1864,6 @@ object SimilarityOps {
       }
       centroids
     }
-
-  /** The brute IVF cell assignment — (vec_id, v, cid) by argmax dot
-    * against a k×Dim literal centroid tree. Argmax via a MATERIALIZED
-    * scores array: a nested when()-chain argmax duplicates each
-    * dot-product subtree exponentially (no CSE across branches; 2^k
-    * evaluations measured as 32 s at k=8). Right at small k (flat
-    * codegen, zero broadcast); at production nlist the literal plan
-    * alone is megabytes and the n×k dots are the cluster-eating job —
-    * [[ivfAssign]] dispatches away from it at [[PruneK]]. */
-  private[graft] def ivfAssignBrute(
-      e: DataFrame, cents: Array[(Int, Array[Double])]): DataFrame = {
-    val k = cents.length
-    // argmax POSITION → the centroid's DECLARED cid, through a literal
-    // lookup — the same `idx.cids(...)` translation the pruned path
-    // applies. Quantizer builds always carry cids 0..k-1 (identity), but
-    // a caller passing non-contiguous cids must get the same cells from
-    // both dispatch arms, not silently index-valued ones here (round-14
-    // ADVICE). Each score inlines ITS OWN centroid literal (like the
-    // Euclidean face): the earlier element_at(full-matrix, i) form put a
-    // copy of the whole k×Dim literal under every score node — a
-    // quadratic Column tree whose driver-side conversion OOMed at
-    // nlist=1024 (round-16 ScaleProbe finding).
-    // typedLit per centroid (and for the cid lookup): same constant-folded
-    // values, one Catalyst node instead of Dim — see kmScores (r21).
-    val cidLit = typedLit(cents.map(_._1).toSeq)
-    e.select(col("vec_id"), col("v"),
-        array((0 until k).map(i =>
-          dot(col("v"), typedLit(cents(i)._2.toSeq))): _*).as("scores"))
-      .select(col("vec_id"), col("v"),
-        element_at(cidLit,
-          array_position(col("scores"), array_max(col("scores"))).cast("int"))
-          .as("cid"))
-  }
-
-  /** The pruned twin: one [[CentIndex]] broadcast + mapPartitions over
-    * the Cauchy–Schwarz MIPS bounds ([[CentIndex.assignMips]]) — same
-    * (vec_id, v, cid) output, cell ids identical to brute by the
-    * evaluated-dots-are-the-same-doubles argument (MipsPruneProps +
-    * IvfPruneSpec assert it). Same shape and rationale as
-    * [[kmAssignPruned]]. */
-  private[graft] def ivfAssignPruned(
-      e: DataFrame, cents: Array[(Int, Array[Double])]): DataFrame = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(new CentIndex(cents))
-    e.select(col("vec_id").cast("long"), col("v"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val idx = bc.value
-        it.map { case (id, v) => (id, v, idx.cids(idx.assignMips(v))) }
-      }
-      .toDF("vec_id", "v", "cid")
-  }
-
-  /** The scale-safe EXHAUSTIVE twin of [[ivfAssignBrute]]: every
-    * centroid evaluated (no bounds, no skips — this is the reference
-    * arm, so it must not share the pruning logic under test), but the
-    * centroids ship as ONE broadcast array instead of a k×Dim literal
-    * Column tree. The literal form embeds a full copy of the centroid
-    * matrix inside every one of its k element_at nodes, and at
-    * nlist=1024 the driver's Column→Expression conversion OOMs the heap
-    * before a single task runs (measured: the round-16 ScaleProbe's
-    * ivf_build_brute arm died exactly there at 1M×1024 — plan
-    * construction, not execution). Per-vector math is the identical
-    * strict left-to-right dot fold as DotProduct's codegen, and
-    * selection replicates array_max + array_position exactly
-    * (SQLOrderingUtil doubles: ±0.0 ties fold via ==, NaN outranks and
-    * equals NaN via Double.compare, first index among ties wins) — the
-    * same transcription [[CentIndex.assignMips]]'s all-NaN fallback
-    * loop carries, minus the index's grouping. */
-  private[graft] def ivfAssignExhaustive(
-      e: DataFrame, cents: Array[(Int, Array[Double])]): DataFrame = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(cents)
-    e.select(col("vec_id").cast("long"), col("v"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val cs = bc.value
-        val k = cs.length
-        it.map { case (id, v) =>
-          var best = 0.0
-          var bestIdx = -1
-          var i = 0
-          while (i < k) {
-            val c = cs(i)._2
-            var vc = 0.0
-            var t = 0
-            while (t < c.length) { vc += v(t) * c(t); t += 1 }
-            val cmp =
-              if (bestIdx < 0) 1
-              else if (vc == best) 0
-              else java.lang.Double.compare(vc, best)
-            if (cmp > 0) { best = vc; bestIdx = i }
-            i += 1
-          }
-          (id, v, cs(bestIdx)._1)
-        }
-      }
-      .toDF("vec_id", "v", "cid")
-  }
-
-  /** IVF cell assignment with the [[kmAssign]] dispatch rule: below
-    * [[PruneK]] the flat literal plan (and the registered k=8 oracle
-    * path keeps its proven shape); at or above it the MIPS-pruned
-    * broadcast path. NOTE [[ivfAssignBrute]] returns vec_id at its
-    * source type while the pruned path casts to long — callers compare
-    * on values, and the registry query's downstream casts are
-    * unaffected. */
-  private[graft] def ivfAssign(
-      e: DataFrame, cents: Array[(Int, Array[Double])]): DataFrame =
-    if (cents.length >= PruneK) ivfAssignPruned(e, cents)
-    else ivfAssignBrute(e, cents)
-
-  /** IVF coarse quantizer: k centroids refined by `iters` Lloyd's steps,
-    * built entirely from DataFrame ops — assignment is [[ivfAssign]]
-    * (broadcast-pruned at production nlist, literal-brute at oracle k),
-    * update is a k-row codegen'd per-component aggregate. Deterministic:
-    * initial centroids are vec_id 0..k-1. This is the canonical scalable
-    * iterative-algorithm shape: each iteration is one scan + one tiny
-    * (k-row) aggregate, no driver math beyond collecting k centroids for
-    * the next broadcast. `forceBrute` is the ScaleProbe A/B hook — it
-    * pins the brute plan past PruneK so the probe can assert the two
-    * builds emit bit-identical centroids before trusting the fast one.
-    */
-  private[graft] def ivfCentroids(
-      eIn: DataFrame, k: Int, iters: Int,
-      forceBrute: Boolean = false): Array[(Int, Array[Double])] = trainConf(eIn, k) { e =>
-    val spark = e.sparkSession
-    import spark.implicits._
-    var centroids: Array[(Int, Array[Double])] = e
-      .filter(col("vec_id") < k)
-      .select(col("vec_id").cast("int"), col("v"))
-      .as[(Int, Array[Double])](EncIV).collect().sortBy(_._1)
-    for (_ <- 1 to iters) {
-      // the forced reference arm dispatches on k too: below PruneK the
-      // literal Column plan (the oracle shape under test), above it the
-      // exhaustive broadcast loop — the literal tree at production nlist
-      // OOMs the driver before execution (see ivfAssignExhaustive)
-      val assigned =
-        if (forceBrute && centroids.length >= PruneK)
-          ivfAssignExhaustive(e, centroids)
-        else if (forceBrute) ivfAssignBrute(e, centroids)
-        else ivfAssign(e, centroids)
-      // Per-component native sums, not the VectorAgg UDAF: 64 codegen'd
-      // sum() aggregates hash-aggregate map-side, while the UDAF forces the
-      // ObjectHashAggregate path with per-row array (de)serialization —
-      // measured 14.6 s → ~4 s for the 2-iteration build at 100k vectors.
-      // (VectorAgg remains the §2B UDAF contract surface via
-      // q_vector_centroid, where the oracle checks it.)
-      val sums = (0 until Dim).map(j =>
-        sum(element_at(col("v"), j + 1)).as(s"s$j"))
-      val updated = assigned
-        .groupBy("cid")
-        .agg(sums.head, sums.tail :+ count(lit(1)).as("n"): _*)
-        .select(col("cid"),
-          array((0 until Dim).map(j => col(s"s$j") / col("n")): _*).as("c"))
-        .as[(Int, Array[Double])](EncIV).collect().toMap
-      // a cluster that attracted no vectors keeps its previous centroid —
-      // otherwise the array shrinks below k and every later element_at /
-      // array_position cell id misaligns (review finding)
-      centroids = centroids.map { case (cid, old) =>
-        cid -> updated.getOrElse(cid, old)
-      }
-    }
-    centroids
-  }
 
   // ---- DuckDB oracle SQL for the hyperplane-sketch ANN family ----
   // The 8 planes are inlined as literal lists: Double.toString emits the

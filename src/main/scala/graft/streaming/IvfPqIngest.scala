@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -45,7 +45,7 @@ import graft.operators.SimilarityOps
   * same state), while ingest and retrieval keep operating:
   *
   *  - the store is MIXED-GENERATION during the interval, and
-  *    [[retrieve]] is correct across the mix — per-generation probed
+  *    [[retrieveGens]] is correct across the mix — per-generation probed
   *    cells and residual LUTs ride one broadcast frame joined on
   *    (gen, cid), so each code row is scored against exactly its own
   *    generation's arithmetic; ADC scores from both generations
@@ -80,7 +80,7 @@ import graft.operators.SimilarityOps
   * ==Deletion==
   *
   * Takedowns append vec_id tombstones to `indexDir/deletes/` ([[delete]]
-  * — O(1), no store scan); [[retrieve]] anti-joins them (broadcast,
+  * — O(1), no store scan); [[retrieveGens]] anti-joins them (broadcast,
   * sparse by contract), [[migrate]] drops them for free, and
   * [[compact]] physically rewrites any (gen, batch) dir past a deleted
   * fraction threshold with crash-safe dir swaps, pruning consumed
@@ -521,7 +521,7 @@ object IvfPqIngest {
     * reads; 8-byte codes are lossy, so re-encoding from codes would
     * compound quantization error across generations). Write-then-delete:
     * the new dir lands complete before the old one goes, so a crash at
-    * any point leaves a store [[retrieve]] reads correctly (the shadowed
+    * any point leaves a store [[retrieveGens]] reads correctly (the shadowed
     * lower-gen copy is ignored) and a re-run converges — already-moved
     * batches are a no-op. */
   def migrateBatch(
@@ -593,7 +593,7 @@ object IvfPqIngest {
     * overwrite stages and commits at job end (a crash mid-job leaves
     * `toGen` untouched), old-generation dirs are deleted only AFTER the
     * commit, and a twice-present batch counts only at the higher
-    * generation in [[retrieve]]; re-running converges. Idempotent. */
+    * generation in [[retrieveGens]]; re-running converges. Idempotent. */
   def migrate(
       spark: SparkSession,
       indexDir: String,
@@ -1165,27 +1165,68 @@ object IvfPqIngest {
       .orderBy("gen", "batch")
   }
 
-  /** ADC retrieval over the ACCUMULATED, possibly MIXED-GENERATION
-    * store: per generation, probed cells from that generation's frozen
-    * centroids and per-cell residual LUTs, all riding ONE broadcast
-    * frame joined on (gen, cid) — each code row is scored against
-    * exactly its own generation's arithmetic; the (gen, cid) filter
-    * partition-prunes the codes scan (gen, batch and cid are all
-    * partition columns); ADC top-k from codes alone — 8 B/row, no
-    * vectors fetched. Returns (vec_id, adc) ascending. */
-  def retrieveGens(
+  /** Largest per-(probe, generation, cell) LUT frame [[retrieveBatch]]
+    * broadcasts: probes × nprobe × generations × nSub·ksub doubles
+    * (~260 MB at 1000 × 16 × 2048, far past a sane broadcast). Under it
+    * one broadcast and one store scan answer the whole batch; over it the
+    * batch goes through [[retrieveBatchDf]]'s decode-side ADC, whose
+    * per-probe footprint has no ksub factor. */
+  private[graft] val LutBroadcastMaxBytes: Long = 32L * 1024 * 1024
+
+  /** [[retrieveBatch]]'s dispatch: true iff the batch's LUT frame fits
+    * [[LutBroadcastMaxBytes]]. */
+  private[graft] def lutFits(
+      probes: Int, nprobe: Int, gens: Int, nSub: Int, ksub: Int): Boolean =
+    probes.toLong * nprobe * gens * nSub * ksub * 8 <= LutBroadcastMaxBytes
+
+  /** One probe's residual LUTs as (gen, cid, lut) rows: per generation,
+    * its nprobe cells from that generation's frozen centroids and one
+    * [[SimilarityOps.pqLut]] per cell. An OPQ generation probes in ITS
+    * OWN rotated space: cells and LUTs come from R·p against
+    * rotated-space structures, and because R is orthonormal the
+    * resulting ADC still estimates ‖p − v‖² — directly comparable with
+    * every other generation's scores in one top-k. */
+  private def probeLuts(
+      gens: Map[Int, GenStructs],
+      pv: Array[Double],
+      nprobe: Int): Seq[(Int, Int, Array[Double])] =
+    gens.toSeq.flatMap { case (g, s) =>
+      val pg = s.rot.map(rotated(_, pv)).getOrElse(pv)
+      SimilarityOps.ivfPqProbedCells(s.cents, pg, nprobe).map {
+        case (cid, c) =>
+          (g, cid, SimilarityOps.pqLut(s.cb,
+            Array.tabulate(pg.length)(j => pg(j) - c(j))))
+      }
+    }
+
+  /** The ADC of a codes row joined to its LUT row (`lut`, `code`). */
+  private def lutAdc(gens: Map[Int, GenStructs]): Column = {
+    val cb = gens.values.head.cb
+    SimilarityOps.pqAdcColOf(col("lut"), col("code"), cb(0).length, cb.length)
+  }
+
+  /** The ONE guarded codes scan every retrieval face reads. Refuses
+    * generations that disagree on (nSub, ksub), structures that do not
+    * match their generation's marker, and a `gens` that misses a
+    * generation the store holds (a retrieval that silently skips a
+    * generation's codes is wrong, not approximate). Only then is `cells`
+    * — the probed (gen, cid) pairs — evaluated, so a refused call runs
+    * no probe work. Returns the codes partition-pruned to those cells
+    * (gen, batch and cid are all partition columns; one disjunct per
+    * generation), minus every shadowed crash-window batch (a batch
+    * present in two generations counts only at the higher one — a no-op
+    * in steady state) and minus tombstoned rows (one broadcast
+    * anti-join, skipped when the store has none). */
+  private def liveCodes(
       spark: SparkSession,
       indexDir: String,
       gens: Map[Int, GenStructs],
-      pv: Array[Double],
-      nprobe: Int,
-      k: Int): DataFrame = {
-    require(gens.nonEmpty, "retrieve needs at least one generation")
-    val shapes = gens.values.map(s => (s.cb.length, s.cb(0).length))
-    require(shapes.toSet.size == 1,
-      s"generations disagree on (nSub, ksub): ${shapes.toSet} — codes " +
+      cells: => Seq[(Int, Int)]): DataFrame = {
+    require(gens.nonEmpty, "retrieval needs at least one generation")
+    val shapes = gens.values.map(s => (s.cb.length, s.cb(0).length)).toSet
+    require(shapes.size == 1,
+      s"generations disagree on (nSub, ksub): $shapes — codes " +
         "of different shapes cannot share one ADC scan")
-    val (nSub, ksub) = shapes.head
     gens.foreach { case (g, s) =>
       checkCodebookMarker(spark, indexDir, g, codebookId(s.cents, s.cb, s.rot))
     }
@@ -1195,49 +1236,41 @@ object IvfPqIngest {
       s"store holds generations $present but structures were passed " +
         s"only for ${gens.keySet} — a retrieval that silently skips a " +
         "generation's codes is wrong, not approximate")
-    // An OPQ generation probes in ITS OWN rotated space: cells and LUTs
-    // come from R·p against rotated-space structures, and because R is
-    // orthonormal the resulting ADC still estimates ‖p − v‖² — directly
-    // comparable with every other generation's scores in one top-k.
-    val probed = gens.toSeq.map { case (g, s) =>
-      val pg = s.rot.map(rotated(_, pv)).getOrElse(pv)
-      g -> SimilarityOps.ivfPqProbedCells(s.cents, pg, nprobe).map {
-        case (cid, c) =>
-          (cid, SimilarityOps.pqLut(s.cb,
-            Array.tabulate(pg.length)(j => pg(j) - c(j))))
-      }
-    }
-    val lutRows = probed.flatMap { case (g, cells) =>
-      cells.map { case (cid, lut) => (g, cid, lut) }
-    }
-    val lutDf = broadcast(
-      spark.createDataFrame(lutRows).toDF("gen", "cid", "lut"))
-    // Partition pruning: one disjunct per generation, each pinning that
-    // generation's own probed cells.
-    val prune = probed.map { case (g, cells) =>
-      col("gen") === g && col("cid").isin(cells.map(_._1): _*)
+    val probed = cells
+    val prune = gens.keySet.toSeq.sorted.map { g =>
+      col("gen") === g &&
+        col("cid").isin(probed.collect { case (`g`, cid) => cid }.distinct: _*)
     }.reduce(_ || _)
-    // Crash-window dup resolution: a batch present in two generations
-    // counts only at the higher one. The shadow set is empty except
-    // mid-migration-crash, so the filter is a no-op in steady state.
-    val shadowed = shadowedBatches(byGen)
-    val dedup = shadowed.foldLeft(lit(true)) { case (acc, (g, b)) =>
-      acc && !(col("gen") === g && col("batch") === b)
+    val dedup = shadowedBatches(byGen).foldLeft(lit(true)) {
+      case (acc, (g, b)) => acc && !(col("gen") === g && col("batch") === b)
     }
     val scanned = spark.read.parquet(s"$indexDir/codes")
-      .filter(prune)
-      .filter(dedup)
-    // Tombstoned rows never reach the shortlist: one broadcast anti-join
-    // (deletions are sparse by contract), skipped entirely when the
-    // store has none — the common case pays nothing.
-    val alive = readDeletes(spark, indexDir) match {
+      .filter(prune).filter(dedup)
+    readDeletes(spark, indexDir) match {
       case Some(del) => scanned.join(broadcast(del), Seq("vec_id"), "left_anti")
       case None => scanned
     }
-    alive
-      .join(lutDf, Seq("gen", "cid"))
-      .withColumn("adc",
-        SimilarityOps.pqAdcColOf(col("lut"), col("code"), ksub, nSub))
+  }
+
+  /** ADC retrieval over the ACCUMULATED, possibly MIXED-GENERATION
+    * store for one probe: its per-generation residual LUTs ride ONE
+    * broadcast frame joined on (gen, cid), so each code row is scored
+    * against exactly its own generation's arithmetic, over
+    * [[liveCodes]]' partition-pruned scan — ADC top-k from codes alone,
+    * 8 B/row, no vectors fetched. Returns a lazy (vec_id, adc) frame,
+    * ascending. */
+  def retrieveGens(
+      spark: SparkSession,
+      indexDir: String,
+      gens: Map[Int, GenStructs],
+      pv: Array[Double],
+      nprobe: Int,
+      k: Int): DataFrame = {
+    val luts = probeLuts(gens, pv, nprobe)
+    liveCodes(spark, indexDir, gens, luts.map { case (g, cid, _) => (g, cid) })
+      .join(broadcast(spark.createDataFrame(luts).toDF("gen", "cid", "lut")),
+        Seq("gen", "cid"))
+      .withColumn("adc", lutAdc(gens))
       .orderBy(col("adc").asc, col("vec_id"))
       .limit(k)
       .select("vec_id", "adc")
@@ -1245,49 +1278,31 @@ object IvfPqIngest {
 
   /** BATCH ADC retrieval over the store — the q_ivfpq_knn_join shape
     * as a first-class store method: one top-k ADC shortlist per probe,
-    * per-(probe, generation, cell) residual LUTs riding broadcast
-    * frames, the join on (gen, cid) doing every probe's nprobe filter
-    * AND its LUT dispatch at once, per-probe top-k through Catalyst's
-    * WindowGroupLimit partial (the shuffle carries ≤ k × probes ×
-    * partitions rows, never the scored product). Mixed generations and
-    * rotations are handled exactly as [[retrieveGens]] — each
-    * generation scores in its own space, one global per-probe top-k.
+    * mixed generations and rotations handled exactly as in
+    * [[retrieveGens]], one global per-probe top-k.
     *
-    * Two physical strategies, picked by `strategy` (default "auto"):
+    * When the batch's LUT frame fits [[LutBroadcastMaxBytes]] (see
+    * [[lutFits]]), the per-(probe, gen, cell) LUTs ride ONE broadcast
+    * frame and the store is scanned ONCE, pruned to the union of the
+    * batch's cells: the join on (gen, cid) does every probe's nprobe
+    * filter and its LUT dispatch at once, and the per-probe top-k runs
+    * through Catalyst's WindowGroupLimit partial (the shuffle carries
+    * ≤ k × probes × partitions rows, never the scored product). A larger
+    * batch is answered by [[retrieveBatchDf]] over the probes as a frame
+    * — the decode-side ADC, bit-identical doubles, one store read.
     *
-    *  - `"lut"` — per-(probe, gen, cell) LUT broadcasts with the
-    *    codegen'd ADC lookup, processed in `chunkProbes`-sized CHUNKS
-    *    because the LUT frame grows as probes × nprobe × (nSub·ksub)
-    *    doubles (~260 MB at 1000 × 16 × 2048) and each chunk pays a
-    *    full store scan. The right shape for SMALL probe batches.
-    *  - `"decode"` — ONE store pass for the whole batch: broadcast the
-    *    raw (per-generation-rotated) probe vectors plus each
-    *    generation's centroids/codebooks — O(probes·dim) + O(structures)
-    *    bytes, no ksub factor — and compute each scored pair's ADC
-    *    DECODE-SIDE (residual = R·p − centroid(cid), minus the decoded
-    *    code entry, squared, summed in pqLut/pqAdcColOf's exact
-    *    ascending-(m, j) fold — BIT-IDENTICAL doubles to the LUT path).
-    *    ~8× the per-pair FLOPs, but the store is read ONCE: at 10M ×
-    *    1000 probes the chunked-LUT path's 4 full scans absorbed most
-    *    of the nprobe pruning win (measured, PqRecallProbe r19), which
-    *    is exactly the regime this path exists for.
-    *
-    * "auto" uses decode when the LUT frame would exceed one bounded
-    * broadcast (~32 MB). The result is MATERIALIZED either way
-    * (probes × k rows — the answer's natural size, driver-small by
-    * construction) and returned as a local-backed frame of
-    * (probe_id, vec_id, adc) ascending per probe. */
+    * The result is MATERIALIZED either way (probes × k rows — the
+    * answer's natural size, driver-small by construction) and returned
+    * as a local-backed frame of (probe_id, vec_id, adc), ascending per
+    * probe. */
   def retrieveBatch(
       spark: SparkSession,
       indexDir: String,
       gens: Map[Int, GenStructs],
       probes: Seq[(Long, Array[Double])],
       nprobe: Int,
-      k: Int,
-      chunkProbes: Int = 250,
-      strategy: String = "auto"): DataFrame = {
+      k: Int): DataFrame = {
     require(gens.nonEmpty, "retrieveBatch needs at least one generation")
-    require(chunkProbes > 0, s"chunkProbes must be positive: $chunkProbes")
     // Duplicate probe ids would build duplicate (probe, gen, cid)
     // LUT/dispatch rows, score each candidate once per duplicate, and
     // cut the effective per-probe k roughly in half (r19 advisor) —
@@ -1296,192 +1311,42 @@ object IvfPqIngest {
       "duplicate probe_ids in the batch — each candidate would score " +
         "once per duplicate and the per-probe top-k would repeat rows; " +
         "dedupe the probe list")
-    require(Set("auto", "lut", "decode")(strategy),
-      s"unknown strategy '$strategy' (auto|lut|decode)")
-    val shapes = gens.values.map(s => (s.cb.length, s.cb(0).length))
-    require(shapes.toSet.size == 1,
-      s"generations disagree on (nSub, ksub): ${shapes.toSet} — codes " +
-        "of different shapes cannot share one ADC scan")
-    val (nSub, ksub) = shapes.head
-    gens.foreach { case (g, s) =>
-      checkCodebookMarker(spark, indexDir, g, codebookId(s.cents, s.cb, s.rot))
-    }
-    val byGen = listBatches(spark, indexDir)
-    val present = byGen.collect { case (g, bs) if bs.nonEmpty => g }.toSet
-    require(present.subsetOf(gens.keySet),
-      s"store holds generations $present but structures were passed " +
-        s"only for ${gens.keySet} — a retrieval that silently skips a " +
-        "generation's codes is wrong, not approximate")
-    val shadowed = shadowedBatches(byGen)
-    val del = readDeletes(spark, indexDir)
     import spark.implicits._
-    val perProbe = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("probe_id"))
-      .orderBy(col("adc").asc, col("vec_id"))
-    val lutBytes = probes.size.toLong * nprobe * gens.size * nSub * ksub * 8
-    val useDecode = strategy == "decode" ||
-      (strategy == "auto" && lutBytes > 32L * 1024 * 1024)
-    if (useDecode) {
-      val rows = decodeBatchRows(
-        spark, indexDir, gens, probes, nprobe, k, shadowed, del)
-      return spark.createDataFrame(rows).toDF("probe_id", "vec_id", "adc")
-        .orderBy(col("probe_id"), col("adc").asc, col("vec_id"))
-    }
-    val rows = probes.grouped(chunkProbes).flatMap { chunk =>
-      val probed = chunk.map { case (pid, pv) =>
-        pid -> gens.toSeq.map { case (g, s) =>
-          val pg = s.rot.map(rotated(_, pv)).getOrElse(pv)
-          g -> SimilarityOps.ivfPqProbedCells(s.cents, pg, nprobe).map {
-            case (cid, c) =>
-              (cid, SimilarityOps.pqLut(s.cb,
-                Array.tabulate(pg.length)(j => pg(j) - c(j))))
-          }
+    val cb = gens.values.head.cb
+    val rows =
+      if (lutFits(probes.size, nprobe, gens.size, cb.length, cb(0).length)) {
+        val luts = probes.flatMap { case (pid, pv) =>
+          probeLuts(gens, pv, nprobe).map { case (g, cid, lut) => (pid, g, cid, lut) }
         }
-      }
-      val lutRows = probed.flatMap { case (pid, perGen) =>
-        perGen.flatMap { case (g, cells) =>
-          cells.map { case (cid, lut) => (pid, g, cid, lut) }
-        }
-      }
-      val lutDf = broadcast(spark.createDataFrame(lutRows)
-        .toDF("probe_id", "gen", "cid", "lut"))
-      // Chunk-level partition prune: per generation, the union of every
-      // chunk probe's cells — static, so it reaches the scan; the join
-      // below then narrows to each probe's own cells.
-      val prune = gens.keySet.toSeq.sorted.map { g =>
-        val cids = probed.flatMap(_._2.collect {
-          case (`g`, cells) => cells.map(_._1)
-        }.flatten).distinct
-        col("gen") === g && col("cid").isin(cids: _*)
-      }.reduce(_ || _)
-      val dedup = shadowed.foldLeft(lit(true)) { case (acc, (g, b)) =>
-        acc && !(col("gen") === g && col("batch") === b)
-      }
-      val scanned = spark.read.parquet(s"$indexDir/codes")
-        .filter(prune).filter(dedup)
-      val alive = del match {
-        case Some(d) => scanned.join(broadcast(d), Seq("vec_id"), "left_anti")
-        case None => scanned
-      }
-      alive
-        .join(lutDf, Seq("gen", "cid"))
-        .select(col("probe_id"), col("vec_id"),
-          SimilarityOps.pqAdcColOf(col("lut"), col("code"), ksub, nSub)
-            .as("adc"))
-        .withColumn("rk", row_number().over(perProbe))
-        .filter(col("rk") <= k)
-        .select("probe_id", "vec_id", "adc")
-        .as[(Long, Long, Double)].collect()
-    }.toSeq
-    spark.createDataFrame(rows).toDF("probe_id", "vec_id", "adc")
+        val scored = liveCodes(spark, indexDir, gens, luts.map(r => (r._2, r._3)))
+          .join(broadcast(spark.createDataFrame(luts)
+            .toDF("probe_id", "gen", "cid", "lut")), Seq("gen", "cid"))
+          .select(col("probe_id"), col("vec_id"), lutAdc(gens).as("adc"))
+        perProbeTopK(scored, k).as[(Long, Long, Double)].collect()
+      } else
+        retrieveBatchDf(spark, indexDir, gens, probes.toDF("probe_id", "v"), nprobe, k)
+          .as[(Long, Long, Double)].collect()
+    spark.createDataFrame(rows.toSeq).toDF("probe_id", "vec_id", "adc")
       .orderBy(col("probe_id"), col("adc").asc, col("vec_id"))
   }
 
-  /** [[retrieveBatch]]'s ONE-PASS decode-side ADC: broadcast the
-    * per-generation-rotated probe vectors + each generation's
-    * centroids/codebooks (KBs–MBs, independent of ksub·nprobe), join
-    * the codes scan against the tiny (probe, gen, cid) dispatch table,
-    * and compute each pair's ADC in a per-partition loop —
-    * t = (R·p − centroid) − decode(code) squared and summed in the
-    * exact ascending-(m, j) fold [[SimilarityOps.pqLut]]/`pqAdcColOf`
-    * replay, so the two strategies return BIT-IDENTICAL doubles
-    * (IvfPqOpqSpec pins it). ~8× the per-pair FLOPs of a LUT lookup,
-    * ONE store read for any batch size. */
-  private def decodeBatchRows(
-      spark: SparkSession,
-      indexDir: String,
-      gens: Map[Int, GenStructs],
-      probes: Seq[(Long, Array[Double])],
-      nprobe: Int,
-      k: Int,
-      shadowed: Seq[(Int, Long)],
-      del: Option[DataFrame]): Seq[(Long, Long, Double)] = {
-    import spark.implicits._
-    val rotProbes: Map[(Long, Int), Array[Double]] =
-      probes.flatMap { case (pid, pv) =>
-        gens.toSeq.map { case (g, s) =>
-          (pid, g) -> s.rot.map(rotated(_, pv)).getOrElse(pv)
-        }
-      }.toMap
-    val pairRows = probes.flatMap { case (pid, _) =>
-      gens.toSeq.flatMap { case (g, s) =>
-        SimilarityOps.ivfPqProbedCells(s.cents, rotProbes((pid, g)), nprobe)
-          .map { case (cid, _) => (pid, g, cid) }
-      }
-    }
-    val pairDf = broadcast(spark.createDataFrame(pairRows)
-      .toDF("probe_id", "gen", "cid"))
-    val prune = gens.keySet.toSeq.sorted.map { g =>
-      val cids = pairRows.collect { case (_, `g`, cid) => cid }.distinct
-      col("gen") === g && col("cid").isin(cids: _*)
-    }.reduce(_ || _)
-    val dedup = shadowed.foldLeft(lit(true)) { case (acc, (g, b)) =>
-      acc && !(col("gen") === g && col("batch") === b)
-    }
-    val scanned = spark.read.parquet(s"$indexDir/codes")
-      .filter(prune).filter(dedup)
-    val alive = del match {
-      case Some(d) => scanned.join(broadcast(d), Seq("vec_id"), "left_anti")
-      case None => scanned
-    }
-    val sc = spark.sparkContext
-    val bcProbes = sc.broadcast(rotProbes)
-    val bcCents = sc.broadcast(gens.map { case (g, s) => g -> s.cents.toMap })
-    val bcBooks = sc.broadcast(gens.map { case (g, s) => g -> s.cb })
-    val perProbe = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("probe_id"))
-      .orderBy(col("adc").asc, col("vec_id"))
-    try {
-      alive
-        .join(pairDf, Seq("gen", "cid"))
-        .select(col("probe_id").cast("long"), col("gen").cast("int"),
-          col("cid").cast("int"), col("vec_id").cast("long"), col("code"))
-        .as[(Long, Int, Int, Long, Seq[Byte])]
-        .mapPartitions { it =>
-          val pm = bcProbes.value
-          val cm = bcCents.value
-          val bm = bcBooks.value
-          it.map { case (pid, g, cid, vid, code) =>
-            val pg = pm((pid, g))
-            val c = cm(g)(cid)
-            val books = bm(g)
-            val ds = books(0)(0).length
-            var adc = 0.0
-            var m = 0
-            while (m < books.length) {
-              val ce = books(m)(code(m) & 0xFF)
-              var dd = 0.0
-              var j = 0
-              while (j < ds) {
-                // (pg − c) first, then − ce: the same two IEEE
-                // subtractions, in the same order, as pqLut's residual
-                // array followed by its distance fold — bit-identical.
-                val t = (pg(m * ds + j) - c(m * ds + j)) - ce(j)
-                dd += t * t
-                j += 1
-              }
-              adc += dd
-              m += 1
-            }
-            (pid, vid, adc)
-          }
-        }
-        .toDF("probe_id", "vec_id", "adc")
-        .withColumn("rk", row_number().over(perProbe))
-        .filter(col("rk") <= k)
-        .select("probe_id", "vec_id", "adc")
-        .as[(Long, Long, Double)].collect().toSeq
-    } finally { bcProbes.destroy(); bcCents.destroy(); bcBooks.destroy() }
-  }
+  /** The batch faces' per-probe top-k of a scored (probe_id, vec_id,
+    * adc) frame, ADC ascending then vec_id. */
+  private def perProbeTopK(scored: DataFrame, k: Int): DataFrame =
+    scored
+      .withColumn("rk", row_number().over(org.apache.spark.sql.expressions.Window
+        .partitionBy(col("probe_id")).orderBy(col("adc").asc, col("vec_id"))))
+      .filter(col("rk") <= k)
+      .select("probe_id", "vec_id", "adc")
 
-  /** DATAFRAME-NATIVE batch ADC retrieval — [[retrieveBatch]]'s decode
-    * strategy with the probe set as a FRAME (r19 judge #2): probes are
-    * never materialized on the driver, so the batch can be the corpus
-    * itself — the SemDeDup/knn-graph construction shape, where every
-    * indexed vector is a probe. `probes` is (probe_id: long,
-    * v: array<double>); returns (probe_id, vec_id, adc), ≤ k rows per
-    * probe, UNSORTED across probes (a global order over a corpus-sized
-    * result is the caller's to pay for).
+  /** DATAFRAME-NATIVE batch ADC retrieval with the probe set as a FRAME
+    * (r19 judge #2): probes are never materialized on the driver, so the
+    * batch can be the corpus itself — the SemDeDup/knn-graph
+    * construction shape, where every indexed vector is a probe — and a
+    * [[retrieveBatch]] over the LUT bound lands here. `probes` is
+    * (probe_id: long, v: array<double>); returns (probe_id, vec_id,
+    * adc), ≤ k rows per probe, UNSORTED across probes (a global order
+    * over a corpus-sized result is the caller's to pay for).
     *
     * Plan, frame to frame:
     *  1. one map-side pass over the probe frame (each generation's
@@ -1489,24 +1354,28 @@ object IvfPqIngest {
     *     frame (probe_id, gen, cid, pg) — the probe's per-generation
     *     rotated vector and its nprobe probed cells, ~dim·8 B × nprobe
     *     × generations per probe, distributed, never collected. The
-    *     probe frame is evaluated ONCE (persisted for the pass, then
-    *     released) and the dispatch frame is locally checkpointed, so
-    *     an expensive — or nondeterministic — probe plan is computed
-    *     exactly once and every downstream consumer sees the same rows
-    *     (r20 advice #4);
-    *  2. the codes scan partition-prunes to the UNION of probed cells —
-    *     a distinct over the checkpointed dispatch frame, driver-bounded
-    *     by generations × nlist ints REGARDLESS of probe count (at
-    *     knn-graph scale every cell is probed and the filter is a
-    *     no-op, which is exactly when pruning stops mattering);
+    *     probe frame is evaluated ONCE (persisted for the pass, released
+    *     when it ends — also when the call is refused) and the dispatch
+    *     frame is locally checkpointed, so an expensive — or
+    *     nondeterministic — probe plan is computed exactly once and
+    *     every downstream consumer sees the same rows (r20 advice #4);
+    *  2. [[liveCodes]] prunes the codes scan to the UNION of probed
+    *     cells — a distinct over the checkpointed dispatch frame,
+    *     driver-bounded by generations × nlist ints REGARDLESS of probe
+    *     count (at knn-graph scale every cell is probed and the filter
+    *     is a no-op, which is exactly when pruning stops mattering);
     *  3. codes ⋈ dispatch ON (gen, cid) — a shuffle join (the dispatch
     *     side is probe-count-sized; AQE splits skewed hot cells), each
     *     matched pair carrying its probe's rotated vector through the
     *     pipelined iterator;
-    *  4. per-pair ADC in a per-partition loop against broadcast
-    *     centroids/codebooks — the EXACT fold of [[retrieveBatch]]'s
-    *     decode strategy, so the two faces return bit-identical doubles
-    *     (spec-pinned);
+    *  4. per-pair ADC DECODE-SIDE in a per-partition loop against
+    *     broadcast centroids/codebooks: t = (R·p − centroid) −
+    *     decode(code), squared and summed in the exact ascending-(m, j)
+    *     fold [[SimilarityOps.pqLut]]/`pqAdcColOf` replay, so this face
+    *     and the LUT faces return BIT-IDENTICAL doubles (IvfPqOpqSpec
+    *     pins it). ~8× the per-pair FLOPs of a LUT lookup, but no ksub
+    *     factor in the per-probe footprint and ONE store read for any
+    *     batch size;
     *  5. per-probe top-k through Catalyst's WindowGroupLimit partial —
     *     the exchange carries ≤ k × probes × partitions rows, never the
     *     scored product.
@@ -1516,11 +1385,7 @@ object IvfPqIngest {
     * scored stream — size `spark.sql.shuffle.partitions` so
     * probes × nprobe × (rows/nlist) / partitions stays ≲ 10M pairs
     * (measured: 16B pairs over 32 partitions = ~1.5 GB per-task sorts
-    * and a heap cliff; IvfPqBatchScaleProbe encodes the rule).
-    *
-    * Tombstones, shadowed crash-window batches, and mixed
-    * rotated/unrotated generations are handled exactly as
-    * [[retrieveGens]]. */
+    * and a heap cliff; IvfPqBatchScaleProbe encodes the rule). */
   def retrieveBatchDf(
       spark: SparkSession,
       indexDir: String,
@@ -1528,91 +1393,50 @@ object IvfPqIngest {
       probes: DataFrame,
       nprobe: Int,
       k: Int): DataFrame = {
-    require(gens.nonEmpty, "retrieveBatchDf needs at least one generation")
-    val shapes = gens.values.map(s => (s.cb.length, s.cb(0).length))
-    require(shapes.toSet.size == 1,
-      s"generations disagree on (nSub, ksub): ${shapes.toSet} — codes " +
-        "of different shapes cannot share one ADC scan")
-    gens.foreach { case (g, s) =>
-      checkCodebookMarker(spark, indexDir, g, codebookId(s.cents, s.cb, s.rot))
-    }
-    val byGen = listBatches(spark, indexDir)
-    val present = byGen.collect { case (g, bs) if bs.nonEmpty => g }.toSet
-    require(present.subsetOf(gens.keySet),
-      s"store holds generations $present but structures were passed " +
-        s"only for ${gens.keySet} — a retrieval that silently skips a " +
-        "generation's codes is wrong, not approximate")
-    val shadowed = shadowedBatches(byGen)
-    val del = readDeletes(spark, indexDir)
     import spark.implicits._
+    val sc = spark.sparkContext
     val p = probes.select(col("probe_id").cast("long").as("probe_id"),
       col("v").cast("array<double>").as("v"))
-      // The probe frame may be an expensive (and possibly
-      // nondeterministic: sample(), rand-derived) upstream plan — the
-      // SemDeDup corpus-as-probes shape. It is evaluated ONCE into this
-      // cache (r20 verdict "what's wrong" #1 / advice #4): the duplicate
-      // check populates it, the dispatch pass reads it, and everything
-      // downstream reads the CHECKPOINTED dispatch, so the cell prune can
-      // never disagree with the rows the join actually scores.
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Duplicate probe ids would score each candidate once per duplicate
-    // (the Seq face refuses them too); one aggregate over the probe
-    // frame is noise next to the retrieval itself.
-    require(p.groupBy("probe_id").count()
-      .filter(col("count") > 1).limit(1).count() == 0,
-      "duplicate probe_ids in the probe frame — each candidate would " +
-        "score once per duplicate; dedupe before retrieval")
-    val sc = spark.sparkContext
-    // Broadcasts are leased to the returned lazy frame — ContextCleaner
-    // reclaims them (unlike encodeFrame's per-micro-batch loop, this is
-    // a one-shot call).
-    val bcAssign = sc.broadcast(gens.map { case (g, s) => g -> (s.cents, s.rot) })
-    // ONE dispatch pass (was: a pg-free replay for the cell union plus a
-    // second full pass for the join — the per-probe nprobe argmax over
-    // nlist cells ran twice, and an expensive unpersisted probe plan
-    // recomputed wholesale). localCheckpoint truncates the lineage, so
-    // the cell-union collect below materializes the blocks and the
-    // dispatch join reads the SAME rows; the blocks are leased to the
-    // returned frame like the broadcasts (ContextCleaner reclaims them
-    // when the caller drops it).
-    val dispatch = p.as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val gm = bcAssign.value
-        it.flatMap { case (pid, pv) =>
-          gm.iterator.flatMap { case (g, (cents, rot)) =>
-            val pg = rot.map(rotated(_, pv)).getOrElse(pv)
-            SimilarityOps.ivfPqProbedCells(cents, pg, nprobe).map {
-              case (cid, _) => (pid, g, cid, pg)
+    // Built only once the guards and the duplicate check pass, so a
+    // refused call leaves no checkpoint behind. localCheckpoint truncates
+    // the lineage, so the cell-union collect below materializes the
+    // blocks and the join reads the SAME rows. Blocks and broadcasts are
+    // leased to the returned lazy frame — ContextCleaner reclaims them
+    // (unlike encodeFrame's per-micro-batch loop, this is a one-shot
+    // call).
+    lazy val dispatch = {
+      val bcAssign = sc.broadcast(gens.map { case (g, s) => g -> (s.cents, s.rot) })
+      p.as[(Long, Array[Double])]
+        .mapPartitions { it =>
+          val gm = bcAssign.value
+          it.flatMap { case (pid, pv) =>
+            gm.iterator.flatMap { case (g, (cents, rot)) =>
+              val pg = rot.map(rotated(_, pv)).getOrElse(pv)
+              SimilarityOps.ivfPqProbedCells(cents, pg, nprobe).map {
+                case (cid, _) => (pid, g, cid, pg)
+              }
             }
           }
         }
-      }
-      .toDF("probe_id", "gen", "cid", "pg")
-      .localCheckpoint(false)
-    val cellSet = dispatch.select(col("gen"), col("cid")).distinct()
-      .as[(Int, Int)].collect()
-    // dispatch is materialized and lineage-truncated past this point; the
-    // probe cache has served both its consumers.
-    p.unpersist()
-    val prune = gens.keySet.toSeq.sorted.map { g =>
-      val cids = cellSet.collect { case (`g`, cid) => cid }.toSeq
-      col("gen") === g && col("cid").isin(cids: _*)
-    }.reduce(_ || _)
-    val dedup = shadowed.foldLeft(lit(true)) { case (acc, (g, b)) =>
-      acc && !(col("gen") === g && col("batch") === b)
+        .toDF("probe_id", "gen", "cid", "pg")
+        .localCheckpoint(false)
     }
-    val scanned = spark.read.parquet(s"$indexDir/codes")
-      .filter(prune).filter(dedup)
-    val alive = del match {
-      case Some(d) => scanned.join(broadcast(d), Seq("vec_id"), "left_anti")
-      case None => scanned
-    }
+    val codes =
+      try liveCodes(spark, indexDir, gens, {
+        // Duplicate probe ids would score each candidate once per
+        // duplicate (the Seq face refuses them too); one aggregate over
+        // the cached probe frame is noise next to the retrieval itself.
+        require(p.groupBy("probe_id").count()
+          .filter(col("count") > 1).limit(1).count() == 0,
+          "duplicate probe_ids in the probe frame — each candidate would " +
+            "score once per duplicate; dedupe before retrieval")
+        dispatch.select(col("gen"), col("cid")).distinct()
+          .as[(Int, Int)].collect().toSeq
+      }) finally p.unpersist()
     val bcCents = sc.broadcast(gens.map { case (g, s) => g -> s.cents.toMap })
     val bcBooks = sc.broadcast(gens.map { case (g, s) => g -> s.cb })
-    val perProbe = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("probe_id"))
-      .orderBy(col("adc").asc, col("vec_id"))
-    alive
+    val scored = codes
       .join(dispatch, Seq("gen", "cid"))
       .select(col("probe_id").cast("long"), col("gen").cast("int"),
         col("cid").cast("int"), col("vec_id").cast("long"), col("code"),
@@ -1632,8 +1456,9 @@ object IvfPqIngest {
             var dd = 0.0
             var j = 0
             while (j < ds) {
-              // The decode strategy's exact IEEE fold — see
-              // decodeBatchRows; the two faces are bit-identical.
+              // (pg − c) first, then − ce: the same two IEEE
+              // subtractions, in the same order, as pqLut's residual
+              // array followed by its distance fold — bit-identical.
               val t = (pg(m * ds + j) - c(m * ds + j)) - ce(j)
               dd += t * t
               j += 1
@@ -1645,33 +1470,6 @@ object IvfPqIngest {
         }
       }
       .toDF("probe_id", "vec_id", "adc")
-      .withColumn("rk", row_number().over(perProbe))
-      .filter(col("rk") <= k)
-      .select("probe_id", "vec_id", "adc")
+    perProbeTopK(scored, k)
   }
-
-  /** Mixed-generation retrieval over unrotated structures (the
-    * pre-OPQ tuple surface — delegates to [[retrieveGens]]). */
-  def retrieve(
-      spark: SparkSession,
-      indexDir: String,
-      gens: Map[Int, (Cents, Books)],
-      pv: Array[Double],
-      nprobe: Int,
-      k: Int): DataFrame =
-    retrieveGens(spark, indexDir,
-      gens.map { case (g, (ce, bo)) => g -> GenStructs(ce, bo) },
-      pv, nprobe, k)
-
-  /** Single-generation retrieval (the pre-migration surface). */
-  def retrieve(
-      spark: SparkSession,
-      indexDir: String,
-      cents: Cents,
-      cb: Books,
-      pv: Array[Double],
-      nprobe: Int,
-      k: Int): DataFrame =
-    retrieveGens(spark, indexDir, Map(0 -> GenStructs(cents, cb)),
-      pv, nprobe, k)
 }

@@ -109,7 +109,8 @@ class IvfPqIngestSpec extends AnyFunSuite {
     // re-rank stage's job (q_ivfpq_topk), not the 8-byte store's. What
     // the ingest store owes is the SHORTLIST: k covering the tie group
     // must surface every planted twin at the minimum ADC score.
-    val got = IvfPqIngest.retrieve(spark, dir, cents, cb, pv, 3, 20)
+    val got = IvfPqIngest.retrieveGens(spark, dir,
+      Map(0 -> IvfPqIngest.GenStructs(cents, cb)), pv, 3, 20)
     // the nprobe filter must reach the scan as partition pruning even
     // across the batch=N/cid=K two-level layout
     val plan = got.queryExecution.executedPlan.toString
@@ -249,7 +250,8 @@ class IvfPqIngestSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("incomparable"))
     val ex2 = intercept[IllegalArgumentException] {
-      IvfPqIngest.retrieve(spark, dir, cents, cb2, boot.head._2, 2, 5)
+      IvfPqIngest.retrieveGens(spark, dir,
+        Map(0 -> IvfPqIngest.GenStructs(cents, cb2)), boot.head._2, 2, 5)
     }
     assert(ex2.getMessage.contains("incomparable"))
   }

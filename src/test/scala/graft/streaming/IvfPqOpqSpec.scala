@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.TestSpark
 import graft.operators.SimilarityOps
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -169,7 +170,8 @@ class IvfPqOpqSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("incomparable"))
     // And retrieval with the rotation dropped must refuse too.
     val ex2 = intercept[IllegalArgumentException] {
-      IvfPqIngest.retrieve(spark, dir, s.cents, s.cb, fixture._1(7)._2, 3, 5)
+      IvfPqIngest.retrieveGens(spark, dir,
+        Map(0 -> IvfPqIngest.GenStructs(s.cents, s.cb)), fixture._1(7)._2, 3, 5)
         .collect()
     }
     assert(ex2.getMessage.contains("incomparable"))
@@ -203,90 +205,60 @@ class IvfPqOpqSpec extends AnyFunSuite {
     assert(flatB(disarmed.cb) == flatB(gen0.cb))
   }
 
-  test("retrieveBatch == per-probe retrieveGens on the mixed rotated store") {
-    val dir = freshDir("batch")
+  /** The hardest store state for retrieval: gen 0 unrotated, batch 0
+    * migrated to the rotated gen 1, batch 1 present at BOTH generations
+    * (a crash-window shadowed batch) and ids 20 and 3100 tombstoned. */
+  private def mixedStore(tag: String): String = {
+    val dir = freshDir(tag)
     build(dir, gen0, 0)
     IvfPqIngest.beginGeneration(spark, dir, 1, gen1.cents, gen1.cb, gen1.rot)
     IvfPqIngest.migrateBatch(spark, dir, 0L, df(allRows), 0, 1,
       gen1.cents, gen1.cb, gen1.rot)
-    IvfPqIngest.migrateBatch(spark, dir, 1L, df(allRows), 0, 1,
-      gen1.cents, gen1.cb, gen1.rot)
-    val gens = Map(0 -> gen0, 1 -> gen1)
-    val probes = Seq(7L, 20L, 55L).map(i => i -> fixture._1(i.toInt)._2)
-    // chunkProbes = 2 forces the chunked path (2 + 1).
-    val got = IvfPqIngest.retrieveBatch(spark, dir, gens, probes, 3, 15,
-      chunkProbes = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .groupBy(_._1)
-    probes.foreach { case (pid, pv) =>
-      val single = IvfPqIngest.retrieveGens(spark, dir, gens, pv, 3, 15)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      val batch = got(pid).map(t => (t._2, t._3)).toSeq
-      assert(batch == single,
-        s"probe $pid: batch face diverged from single retrieval\n" +
-          s"batch:  $batch\nsingle: $single")
-    }
-    // The one-pass DECODE strategy returns BIT-IDENTICAL rows to the
-    // chunked-LUT strategy — same residual arithmetic in the same fold
-    // order, so the choice is purely a cost decision.
-    val decoded = IvfPqIngest.retrieveBatch(spark, dir, gens, probes, 3, 15,
-      strategy = "decode")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val lutRows = IvfPqIngest.retrieveBatch(spark, dir, gens, probes, 3, 15,
-      strategy = "lut", chunkProbes = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(decoded == lutRows,
-      s"decode-side ADC diverged from the LUT path\n$decoded\nvs\n$lutRows")
-
-    // Tombstones are respected by the batch face too (both strategies).
-    val victim = got(7L).head._2
-    IvfPqIngest.delete(spark, dir,
-      spark.createDataFrame(Seq(Tuple1(victim))).toDF("vec_id"))
-    for (strat <- Seq("lut", "decode")) {
-      val after = IvfPqIngest.retrieveBatch(spark, dir, gens, probes, 3, 15,
-        chunkProbes = 2, strategy = strat)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(!after.exists(_._2 == victim),
-        s"[$strat] tombstoned $victim leaked into the batch shortlist")
-      assert(after.count(_._1 == 7L) == 15,
-        s"[$strat] batch top-k under-filled after a tombstone with live rows")
-    }
-  }
-
-  test("retrieveBatchDf == retrieveBatch(decode) bit for bit on the mixed rotated store") {
-    // The DataFrame-native face (probes as a frame, nothing driver-
-    // materialized) must return EXACTLY the Seq face's decode-strategy
-    // rows — same candidates, bit-identical ADC doubles — across the
-    // hardest store state: mixed rotated/unrotated generations, a
-    // shadowed crash-window batch, and tombstones.
-    val dir = freshDir("dfbatch")
-    build(dir, gen0, 0)
-    IvfPqIngest.beginGeneration(spark, dir, 1, gen1.cents, gen1.cb, gen1.rot)
-    IvfPqIngest.migrateBatch(spark, dir, 0L, df(allRows), 0, 1,
-      gen1.cents, gen1.cb, gen1.rot)
-    // Crash window: batch 1 present at BOTH generations.
     IvfPqIngest.processBatch(df(fixture._2.head), 1L, dir,
       gen1.cents, gen1.cb, 1, gen1.rot)
     assert(IvfPqIngest.shadowedBatches(IvfPqIngest.listBatches(spark, dir))
       .nonEmpty, "fixture must exercise the shadowed-batch filter")
     IvfPqIngest.delete(spark, dir,
       spark.createDataFrame(Seq(Tuple1(20L), Tuple1(3100L))).toDF("vec_id"))
-    val gens = Map(0 -> gen0, 1 -> gen1)
+    dir
+  }
+
+  private lazy val mixedGens = Map(0 -> gen0, 1 -> gen1)
+
+  private def batchRows(d: DataFrame): Seq[(Long, Long, Double)] =
+    d.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .sortBy(t => (t._1, t._3, t._2)).toSeq
+
+  test("LUT batch == decode batch == per-probe retrieveGens, bit for bit") {
+    // The LUT face (retrieveBatch under its bound), the decode face
+    // (retrieveBatchDf, probes as a frame) and one retrieveGens per probe
+    // must return the same candidates with bit-identical ADC doubles:
+    // one guarded scan, the same residual arithmetic in the same fold
+    // order, so the face is purely a cost decision.
+    val dir = mixedStore("faces")
+    val gens = mixedGens
     val probes = Seq(7L, 20L, 55L, 100L).map(i => i -> fixture._1(i.toInt)._2)
-    val seqRows = IvfPqIngest.retrieveBatch(spark, dir, gens, probes, 3, 15,
-      strategy = "decode")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .sortBy(t => (t._1, t._3, t._2)).toSeq
     val probesDf = spark.createDataFrame(probes).toDF("probe_id", "v")
-    val dfRows = IvfPqIngest.retrieveBatchDf(spark, dir, gens, probesDf, 3, 15)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .sortBy(t => (t._1, t._3, t._2)).toSeq
-    assert(dfRows == seqRows,
-      s"DataFrame face diverged from the Seq decode face\n$dfRows\nvs\n$seqRows")
-    assert(!dfRows.exists(t => t._2 == 20L || t._2 == 3100L),
-      "tombstoned ids leaked through the DataFrame face")
-    assert(probes.forall { case (pid, _) => dfRows.count(_._1 == pid) == 15 },
-      "per-probe top-k under-filled")
+    val lutRows = batchRows(
+      IvfPqIngest.retrieveBatch(spark, dir, gens, probes, 3, 15))
+    val decoded = batchRows(
+      IvfPqIngest.retrieveBatchDf(spark, dir, gens, probesDf, 3, 15))
+    assert(decoded == lutRows,
+      s"decode-side ADC diverged from the LUT face\n$decoded\nvs\n$lutRows")
+    probes.foreach { case (pid, pv) =>
+      val single = IvfPqIngest.retrieveGens(spark, dir, gens, pv, 3, 15)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      val batch = lutRows.filter(_._1 == pid).map(t => (t._2, t._3))
+      assert(batch == single,
+        s"probe $pid: batch faces diverged from single retrieval\n" +
+          s"batch:  $batch\nsingle: $single")
+    }
+    for ((face, rows) <- Seq("lut" -> lutRows, "decode" -> decoded)) {
+      assert(!rows.exists(t => t._2 == 20L || t._2 == 3100L),
+        s"[$face] tombstoned ids leaked into the batch shortlist")
+      assert(probes.forall { case (pid, _) => rows.count(_._1 == pid) == 15 },
+        s"[$face] per-probe top-k under-filled")
+    }
     // The per-probe top-k must run through the WindowGroupLimit partial
     // — the exchange carries k×probes×partitions rows, never the scored
     // product — and duplicate probe ids are refused, not mis-ranked.
@@ -294,11 +266,63 @@ class IvfPqOpqSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(plan.contains("WindowGroupLimit") && plan.contains("Partial"),
       s"batch top-k lost the WindowGroupLimit partial:\n$plan")
-    val dup = probesDf.unionByName(probesDf.limit(1))
     val ex = intercept[IllegalArgumentException] {
-      IvfPqIngest.retrieveBatchDf(spark, dir, gens, dup, 3, 15)
+      IvfPqIngest.retrieveBatchDf(spark, dir, gens,
+        probesDf.unionByName(probesDf.limit(1)), 3, 15)
     }
     assert(ex.getMessage.contains("duplicate probe_ids"))
+    val exSeq = intercept[IllegalArgumentException] {
+      IvfPqIngest.retrieveBatch(spark, dir, gens, probes :+ probes.head, 3, 15)
+    }
+    assert(exSeq.getMessage.contains("duplicate probe_ids"))
+  }
+
+  test("retrieveBatch past the LUT bound answers through the decode face") {
+    // 2100 probes × 8 cells × 2 generations × (8 × 16) codes × 8 B is
+    // 34.4 MB of LUTs, past the 32 MB bound; the probes reuse the
+    // bootstrap vectors, so the ones with ids 0..219 must rank exactly as
+    // the LUT face ranks them.
+    val dir = mixedStore("overbound")
+    val gens = mixedGens
+    val probes = (0 until 2100).map(i => i.toLong -> fixture._1(i % nBoot)._2)
+    assert(!IvfPqIngest.lutFits(probes.size, 8, gens.size, 8, 16))
+    val decoded = batchRows(
+      IvfPqIngest.retrieveBatch(spark, dir, gens, probes, 8, 15))
+    assert(decoded.map(_._1).distinct.size == probes.size &&
+      decoded.size == probes.size * 15, "per-probe top-k under-filled")
+    val few = probes.filter(p => Set(7L, 55L, 100L)(p._1))
+    assert(IvfPqIngest.lutFits(few.size, 8, gens.size, 8, 16))
+    val lutRows = batchRows(
+      IvfPqIngest.retrieveBatch(spark, dir, gens, few, 8, 15))
+    assert(decoded.filter(t => Set(7L, 55L, 100L)(t._1)) == lutRows,
+      "over-bound retrieveBatch diverged from the LUT face")
+  }
+
+  test("LUT dispatch: frames up to 32 MB broadcast, larger ones decode") {
+    assert(IvfPqIngest.LutBroadcastMaxBytes == 32L * 1024 * 1024)
+    // 4096 probes × 1 cell × 1 generation × 8 × 128 codes × 8 B = 32 MB
+    assert(IvfPqIngest.lutFits(4096, 1, 1, 8, 128))
+    assert(!IvfPqIngest.lutFits(4097, 1, 1, 8, 128))
+    assert(IvfPqIngest.lutFits(16, 4, 1, 8, 64))
+    assert(!IvfPqIngest.lutFits(1000, 16, 1, 8, 256))
+    assert(IvfPqIngest.lutFits(0, 16, 2, 8, 256))
+    // the product is taken in Long: a huge batch never wraps to "fits"
+    assert(!IvfPqIngest.lutFits(Int.MaxValue, 16, 2, 8, 256))
+  }
+
+  test("a refused duplicate-probe call leaves no probe frame cached") {
+    val dir = freshDir("dupcache")
+    IvfPqIngest.processBatch(df(fixture._1), 0L, dir, gen0.cents, gen0.cb)
+    val probesDf = spark.createDataFrame(
+      Seq(7L, 20L, 7L).map(i => i -> fixture._1(i.toInt)._2)).toDF("probe_id", "v")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    val ex = intercept[IllegalArgumentException] {
+      IvfPqIngest.retrieveBatchDf(spark, dir, Map(0 -> gen0), probesDf, 3, 15)
+    }
+    assert(ex.getMessage.contains("duplicate probe_ids"))
+    assert(sc.getPersistentRDDs.size <= before,
+      s"refused call left ${sc.getPersistentRDDs.size - before} RDDs cached")
   }
 
   test("rotated single-generation retrieval surfaces planted twins") {
