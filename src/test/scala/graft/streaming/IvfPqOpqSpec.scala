@@ -229,36 +229,66 @@ class IvfPqOpqSpec extends AnyFunSuite {
     d.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .sortBy(t => (t._1, t._3, t._2)).toSeq
 
-  test("LUT batch == decode batch == per-probe retrieveGens, bit for bit") {
-    // The LUT face (retrieveBatch under its bound), the decode face
-    // (retrieveBatchDf, probes as a frame) and one retrieveGens per probe
-    // must return the same candidates with bit-identical ADC doubles:
-    // one guarded scan, the same residual arithmetic in the same fold
-    // order, so the face is purely a cost decision.
-    val dir = mixedStore("faces")
+  test("retrieveBatch == per-probe retrieveGens on the mixed rotated store") {
+    // The Seq face (the LUT face under its bound) and one retrieveGens
+    // per probe must return the same candidates with bit-identical ADC
+    // doubles: one guarded scan, the same residual arithmetic in the same
+    // fold order.
+    val dir = mixedStore("batch")
     val gens = mixedGens
     val probes = Seq(7L, 20L, 55L, 100L).map(i => i -> fixture._1(i.toInt)._2)
-    val probesDf = spark.createDataFrame(probes).toDF("probe_id", "v")
+    assert(IvfPqIngest.lutFits(probes.size, 3, gens.size, 8, 16))
     val lutRows = batchRows(
       IvfPqIngest.retrieveBatch(spark, dir, gens, probes, 3, 15))
-    val decoded = batchRows(
-      IvfPqIngest.retrieveBatchDf(spark, dir, gens, probesDf, 3, 15))
-    assert(decoded == lutRows,
-      s"decode-side ADC diverged from the LUT face\n$decoded\nvs\n$lutRows")
     probes.foreach { case (pid, pv) =>
       val single = IvfPqIngest.retrieveGens(spark, dir, gens, pv, 3, 15)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val batch = lutRows.filter(_._1 == pid).map(t => (t._2, t._3))
       assert(batch == single,
-        s"probe $pid: batch faces diverged from single retrieval\n" +
+        s"probe $pid: batch face diverged from single retrieval\n" +
           s"batch:  $batch\nsingle: $single")
     }
-    for ((face, rows) <- Seq("lut" -> lutRows, "decode" -> decoded)) {
-      assert(!rows.exists(t => t._2 == 20L || t._2 == 3100L),
-        s"[$face] tombstoned ids leaked into the batch shortlist")
-      assert(probes.forall { case (pid, _) => rows.count(_._1 == pid) == 15 },
-        s"[$face] per-probe top-k under-filled")
+    assert(!lutRows.exists(t => t._2 == 20L || t._2 == 3100L),
+      "tombstoned ids leaked into the batch shortlist")
+    assert(probes.forall { case (pid, _) => lutRows.count(_._1 == pid) == 15 },
+      "per-probe top-k under-filled")
+    // A tombstone laid after the first answer is respected too: probe 7's
+    // best hit disappears and its top-k refills from live rows.
+    val victim = lutRows.filter(_._1 == 7L).head._2
+    IvfPqIngest.delete(spark, dir,
+      spark.createDataFrame(Seq(Tuple1(victim))).toDF("vec_id"))
+    val after = batchRows(
+      IvfPqIngest.retrieveBatch(spark, dir, gens, probes, 3, 15))
+    assert(!after.exists(_._2 == victim),
+      s"tombstoned $victim leaked into the batch shortlist")
+    assert(after.count(_._1 == 7L) == 15,
+      "batch top-k under-filled after a tombstone with live rows")
+    val exSeq = intercept[IllegalArgumentException] {
+      IvfPqIngest.retrieveBatch(spark, dir, gens, probes :+ probes.head, 3, 15)
     }
+    assert(exSeq.getMessage.contains("duplicate probe_ids"))
+  }
+
+  test("retrieveBatchDf == retrieveBatch(decode) bit for bit on the mixed rotated store") {
+    // retrieveBatchDf is the decode face (probes as a frame, nothing
+    // driver-materialized; retrieveBatch answers through it past the LUT
+    // bound). It must return EXACTLY the rows of retrieveBatch's LUT face
+    // — same candidates, bit-identical ADC doubles — so the face is
+    // purely a cost decision.
+    val dir = mixedStore("dfbatch")
+    val gens = mixedGens
+    val probes = Seq(7L, 20L, 55L, 100L).map(i => i -> fixture._1(i.toInt)._2)
+    val probesDf = spark.createDataFrame(probes).toDF("probe_id", "v")
+    val seqRows = batchRows(
+      IvfPqIngest.retrieveBatch(spark, dir, gens, probes, 3, 15))
+    val dfRows = batchRows(
+      IvfPqIngest.retrieveBatchDf(spark, dir, gens, probesDf, 3, 15))
+    assert(dfRows == seqRows,
+      s"decode-side ADC diverged from the LUT face\n$dfRows\nvs\n$seqRows")
+    assert(!dfRows.exists(t => t._2 == 20L || t._2 == 3100L),
+      "tombstoned ids leaked through the DataFrame face")
+    assert(probes.forall { case (pid, _) => dfRows.count(_._1 == pid) == 15 },
+      "per-probe top-k under-filled")
     // The per-probe top-k must run through the WindowGroupLimit partial
     // — the exchange carries k×probes×partitions rows, never the scored
     // product — and duplicate probe ids are refused, not mis-ranked.
@@ -271,10 +301,6 @@ class IvfPqOpqSpec extends AnyFunSuite {
         probesDf.unionByName(probesDf.limit(1)), 3, 15)
     }
     assert(ex.getMessage.contains("duplicate probe_ids"))
-    val exSeq = intercept[IllegalArgumentException] {
-      IvfPqIngest.retrieveBatch(spark, dir, gens, probes :+ probes.head, 3, 15)
-    }
-    assert(exSeq.getMessage.contains("duplicate probe_ids"))
   }
 
   test("retrieveBatch past the LUT bound answers through the decode face") {
